@@ -6,18 +6,24 @@ IVF beats hash-based LSH when the corpus is clustered: k-means cells adapt
 to the data, so nearest-cell search prunes to the dense regions a probe
 actually lives in. Pipeline:
 
-1. ``kmeans_fit``: Lloyd iterations as pure DataFrame ops —
-   assign = argmin over a broadcast centroid table (k rows), update =
-   posexplode + per-(cell, dim) mean. Deterministic: seeds are the first k
-   vectors by id (no rand()), iteration count fixed.
+1. ``kmeans_fit`` / ``kmeans_fit_exact``: deterministic seeds (hash
+   spread, no rand()), then a fixed number of Lloyd iterations.
+   ``kmeans_fit`` updates with posexplode + per-(cell, dim) means as
+   DataFrame ops; ``kmeans_fit_exact`` (the oracle-replayable form every
+   ANN/semdedup key uses) runs each iteration as ONE Arrow stage — a
+   per-partition numpy kernel assigns every vector to its nearest
+   centroid and sums its fixed-point coordinates per cell — whose
+   O(k×dim) partials ``RDD.treeReduce`` folds before the driver descales
+   them into the next centroids.
 2. ``ivf_assign``: tag each corpus vector with its nearest cell id.
 3. ``ivf_topk``: probe → nearest ``nprobe`` cells → exact cosine re-rank
    within the union of those cells only.
 
-Scale: assignment is a broadcast nested-loop over k centroids (k rows —
-trivially broadcastable); the per-iteration shuffle is the (cell, dim)
-mean, bounded by k×dim. Search touches |corpus| × nprobe / k vectors in
-expectation instead of the full corpus.
+Scale: the k centroids (k×dim doubles) ship inside the plan or the task
+closure; assignment is a stateless projection, no join. A Lloyd
+iteration moves one k×dim partial per partition and no corpus rows.
+Search touches |corpus| × nprobe / k vectors in expectation instead of
+the full corpus.
 """
 
 from __future__ import annotations
@@ -48,6 +54,31 @@ def _dot(a, b):
     )
 
 
+def _ship_module_by_value() -> None:
+    """The Arrow kernels here call module-level helpers; ship the module
+    by value so executors don't need the repo on PYTHONPATH (must be
+    pyspark's vendored cloudpickle — see operators/multimodal.py)."""
+    from pyspark import cloudpickle
+
+    import pyetl_spark.operators.ivf as _self
+
+    cloudpickle.register_pickle_by_value(_self)
+
+
+_NONFINITE_SQL = {"nan": "NaN", "inf": "Infinity", "-inf": "-Infinity"}
+
+
+def sql_double(v: float) -> str:
+    """Exact Spark SQL literal for a double: finite values as
+    ``repr(v) + "D"`` (shortest round-trip form, parsed back correctly
+    rounded), NaN/±Inf as ``CAST('NaN'|'Infinity'|'-Infinity' AS
+    DOUBLE)`` — ``repr`` spells those ``nan``/``inf``, which Spark would
+    read as column names."""
+    r = repr(float(v))
+    special = _NONFINITE_SQL.get(r)
+    return f"CAST('{special}' AS DOUBLE)" if special else r + "D"
+
+
 def localize_rows(spark, rows, schema) -> DataFrame:
     """Rebuild already-collected rows of a BOUNDED frame (index state:
     centroids, codebooks — never corpus-scale) as a SQL ``VALUES``
@@ -58,9 +89,9 @@ def localize_rows(spark, rows, schema) -> DataFrame:
     job per consumer. A VALUES LocalRelation is driver-resident — a
     collect over it is ``executeCollect`` with NO job, and a broadcast
     builds straight from the local rows. Values are bit-identical:
-    doubles round-trip through Python ``repr`` (shortest form) and
-    Spark's correctly-rounded literal parser; the final SELECT casts
-    every column back to ``schema``.
+    doubles round-trip through ``sql_double`` (shortest ``repr`` form and
+    Spark's correctly-rounded literal parser; NaN/±Inf as casts); the
+    final SELECT casts every column back to ``schema``.
 
     Supports the types index state uses (int/long, double, arrays of
     them, None); raises on anything else rather than silently coercing.
@@ -80,7 +111,7 @@ def localize_rows(spark, rows, schema) -> DataFrame:
         if isinstance(v, int):
             return f"{v}L"
         if isinstance(v, float):
-            return repr(v) + "D"
+            return sql_double(v)
         if isinstance(v, (list, tuple)):
             return "array(" + ", ".join(lit(x) for x in v) + ")"
         raise TypeError(f"localize_rows: unsupported cell {type(v)}")
@@ -142,63 +173,87 @@ def _nearest_cell(vec_df: DataFrame, centroids: DataFrame, vec_col: str):
     return _nearest_cell_rows(vec_df, rows, vec_col)
 
 
-def _nearest_cell_rows(vec_df: DataFrame, rows, vec_col: str):
-    """``_nearest_cell`` body over already-collected centroid rows
-    (sorted by cell) — lets callers that need the rows anyway (e.g. the
-    Lloyd loop, which reads the dimension off them) collect once."""
+def _nearest_rows(E: np.ndarray, C: np.ndarray):
+    """(hit, dist) of each row of E (n×dim) against the centroids C
+    (k×dim, ordered by cell) — the numpy arithmetic every Arrow kernel
+    here shares. Distances accumulate over the DIMENSION axis in
+    ascending order (the zip_with/aggregate fold's IEEE add sequence,
+    starting from 0.0), and argmin takes the FIRST minimum, i.e. the
+    lowest cell — the (dist, cell) struct min of the JVM form."""
+    d = np.zeros((E.shape[0], C.shape[0]), dtype=np.float64)
+    for j in range(C.shape[1]):
+        diff = E[:, j, None] - C[None, :, j]
+        d += diff * diff
+    hit = d.argmin(axis=1)
+    return hit, d[np.arange(E.shape[0]), hit]
+
+
+def _vectors(v: pd.Series) -> np.ndarray:
+    """An Arrow batch's array<double> column as an n×dim float64 matrix."""
+    return np.stack(v.to_numpy()).astype(np.float64)
+
+
+def _centroid_matrix(rows):
+    """(cells, C) from centroid rows sorted by cell; raises on none."""
     if not rows:
-        # Fail loudly: an untyped F.lit([]) / np.stack([]) downstream would
+        # Fail loudly: an empty literal / np.stack([]) downstream would
         # crash with an opaque error instead (ADVICE r5 low item).
         raise ValueError(
             "_nearest_cell: centroids DataFrame is empty — k-means over an "
             "empty corpus produces no cells to assign to"
         )
-    if len(rows) < _KERNEL_MIN_K:
-        cells_lit = F.lit([int(r["cell"]) for r in rows])
-        cents_lit = F.lit([[float(x) for x in r["centroid"]] for r in rows])
-        best = F.array_min(
-            F.zip_with(
-                cents_lit,
-                cells_lit,
-                lambda cv, cid: F.struct(
-                    _sq_dist(F.col(vec_col), cv).alias("dist"),
-                    cid.alias("cell"),
-                ),
-            )
+    cells = np.array([int(r["cell"]) for r in rows], dtype=np.int64)
+    C = np.array([r["centroid"] for r in rows], dtype=np.float64)
+    return cells, C
+
+
+def _nearest_cell_rows(vec_df: DataFrame, rows, vec_col: str):
+    """``_nearest_cell`` body over already-collected centroid rows
+    (sorted by cell).
+
+    The JVM form is ONE ``F.expr`` string — cell ids, centroids (via
+    ``sql_double``) and the whole ``array_min(zip_with(…))`` distance —
+    so its plan build costs a handful of Py4J calls at any k×dim, not
+    one per centroid coordinate. Lambda variables carry a leading
+    underscore so they cannot shadow the vector column."""
+    cells, C = _centroid_matrix(rows)
+    if len(cells) < _KERNEL_MIN_K:
+        x = "`" + vec_col.replace("`", "``") + "`"
+        cents = ", ".join(
+            "array(" + ", ".join(sql_double(v) for v in c) + ")" for c in C
+        )
+        ids = ", ".join(str(c) for c in cells)
+        best = F.expr(
+            f"array_min(zip_with(array({cents}), array({ids}), "
+            f"(_cv, _cid) -> struct(aggregate(zip_with({x}, _cv, "
+            f"(_x, _y) -> (_x - _y) * (_x - _y)), 0.0D, "
+            f"(_acc, _t) -> _acc + _t) AS dist, _cid AS cell)))"
         )
     else:
         from pyspark.sql.functions import pandas_udf
 
-        C = np.array(
-            [[float(x) for x in r["centroid"]] for r in rows],
-            dtype=np.float64,
-        )
-        cells = np.array([int(r["cell"]) for r in rows], dtype=np.int64)
+        _ship_module_by_value()
 
         @pandas_udf("cell int, dist double")
         def _assign(v: pd.Series) -> pd.DataFrame:
             if len(v) == 0:
                 return pd.DataFrame({"cell": pd.array([], dtype="int32"),
                                      "dist": pd.array([], dtype="float64")})
-            E = np.stack(v.to_numpy()).astype(np.float64)
-            d = np.zeros((E.shape[0], C.shape[0]), dtype=np.float64)
-            for j in range(C.shape[1]):  # dim-order == aggregate order
-                diff = E[:, j, None] - C[None, :, j]
-                d += diff * diff
-            hit = d.argmin(axis=1)  # first min == lowest cell (sorted)
+            hit, dist = _nearest_rows(_vectors(v), C)
             return pd.DataFrame(
-                {
-                    "cell": cells[hit].astype("int32"),
-                    "dist": d[np.arange(E.shape[0]), hit],
-                }
+                {"cell": cells[hit].astype("int32"), "dist": dist}
             )
 
         best = _assign(F.col(vec_col))
-    return (
-        vec_df.withColumn("_best", best)
-        .withColumn("cell", F.col("_best").getField("cell"))
-        .withColumn("dist", F.col("_best").getField("dist"))
-        .drop("_best")
+    # two projections, not one: the second only reads fields of the
+    # first's struct, so the distance expression is evaluated once
+    keep = [
+        F.col("`" + c.replace("`", "``") + "`")
+        for c in vec_df.columns
+        if c not in ("cell", "dist")
+    ]
+    return vec_df.select(*keep, best.alias("_best")).select(
+        *keep, "_best.cell", "_best.dist"
     )
 
 
@@ -428,6 +483,58 @@ def ivf_topk(
     )
 
 
+def _lloyd_step(vecs: DataFrame, rows, vec_col: str, scale: int):
+    """One exact Lloyd iteration → the next centroid rows (sorted by
+    cell, empty cells dropped), in ONE Spark job.
+
+    A ``mapInPandas`` kernel assigns each vector of a partition to its
+    nearest centroid (``_nearest_rows``) and sums the fixed-point
+    coordinates ``sign(x)·floor(|x|·scale + 0.5)`` per cell as int64,
+    with the member count; it emits one k×dim partial per partition.
+    ``RDD.treeReduce`` folds the partials, so the driver holds O(k×dim)
+    at any partition count. Integer sums are order-free, and the descale
+    ``(float(Σq) / float(n)) / scale`` is the IEEE operation sequence
+    of the SQL mean it replaced — bit-identical centroids. A NaN/±Inf
+    coordinate raises, as the SQL form's ANSI cast to bigint did."""
+    cells, C = _centroid_matrix(rows)
+    k, dim = C.shape
+    fscale = float(scale)
+
+    def partial(batches):
+        q_sum = np.zeros((k, dim), dtype=np.int64)
+        n = np.zeros(k, dtype=np.int64)
+        for pdf in batches:
+            if len(pdf) == 0:
+                continue
+            E = _vectors(pdf[vec_col])
+            if not np.isfinite(E).all():
+                raise ValueError(
+                    "kmeans_fit_exact: NaN/Inf coordinate has no "
+                    "fixed-point value"
+                )
+            hit, _ = _nearest_rows(E, C)
+            q = np.sign(E) * np.floor(np.abs(E) * fscale + 0.5)
+            np.add.at(q_sum, hit, q.astype(np.int64))
+            n += np.bincount(hit, minlength=k)
+        yield pd.DataFrame({"q": [q_sum.ravel()], "n": [n]})
+
+    _ship_module_by_value()
+    q_sum, n = (
+        vecs.mapInPandas(partial, "q array<bigint>, n array<bigint>")
+        .rdd.map(lambda r: (np.array(r.q, np.int64), np.array(r.n, np.int64)))
+        .treeReduce(lambda a, b: (a[0] + b[0], a[1] + b[1]))
+    )
+    live = n > 0
+    means = (
+        q_sum.reshape(k, dim)[live].astype(np.float64)
+        / n[live, None].astype(np.float64)
+    ) / fscale
+    return [
+        {"cell": int(c), "centroid": m.tolist()}
+        for c, m in zip(cells[live], means)
+    ]
+
+
 #: fixed-point quantization for the exact Lloyd means — the SINGLE
 #: definition both the engine (here) and the DuckDB oracle generator
 #: (queries/llm_scale._kmeans_ctes) read, so engine and oracle cannot
@@ -456,8 +563,12 @@ def kmeans_fit_exact(
       descaled with a fixed float expression
       ((Σq / n) / scale) — order-free under any partitioning, unlike
       float sums;
-    - assignment reuses ``_nearest_cell``'s JVM expression path, whose
-      ascending zip_with/aggregate folds a SQL oracle replays verbatim.
+    - assignment is ``_nearest_rows``' numpy kernel, bit-identical to
+      ``_nearest_cell``'s JVM expression: the same ascending-dimension
+      add sequence a SQL oracle replays verbatim, the same lowest-cell
+      tie-break;
+    - empty cells drop out (a cell no vector chose has no mean), so the
+      returned cell ids may have gaps; an empty corpus raises.
 
     Trade-off vs ``kmeans_fit``: centroids are quantized to ``scale``
     precision between iterations (immaterial for clustering quality at
@@ -495,44 +606,20 @@ def kmeans_fit_exact(
             sorted(per_bucket.collect(), key=lambda r: r["bucket"])
         )
     ]
-    # r15 mean update (guide §2.3/§2.4): the old posexplode form shuffled
-    # corpus×dim (cell, pos, fxp-partial) rows through groupBy(cell, pos)
-    # and then RE-shuffled the means through a groupBy(cell)
-    # collect_list/array_sort reassembly. All dim means are instead
-    # computed as flat per-dimension aggregates in ONE groupBy(cell) —
-    # map-side partial aggregation reduces each task to k rows of
-    # (dim longs + count), one exchange total, no reassembly. One
-    # compiled SQL string for all dim aggregates keeps driver-side
-    # plan-build round-trips flat (the _signature_sql pattern). Values
-    # are bit-identical for the uniform-dimension corpora this operator
-    # serves: the per-(cell,pos) integer fxp sums are order-free, and
-    # count(1) per cell equals the old per-(cell,pos) count when every
-    # vector carries all dim positions (pinned by the vec_ann_* /
-    # text_semdedup oracle hashes at 3 SFs).
-    quoted = "`" + vec_col.replace("`", "``") + "`"
+    # Lloyd steps run as numpy kernels (_lloyd_step), not as a SQL
+    # groupBy: interpreted zip_with/aggregate lambdas plus a 64-term mean
+    # aggregate made each iteration's collect cost about twice its jobs'
+    # run time. Seeding stays SQL — a Python seeding kernel was slower.
+    vecs = corpus.select(vec_col)
     for _ in range(iters):
-        assigned = _nearest_cell_rows(
-            corpus.select(id_col, vec_col), rows, vec_col
-        )
-        dim = len(rows[0]["centroid"])
-        terms = ", ".join(
-            f"(cast(sum(cast(signum({quoted}[{j}]) * "
-            f"floor(abs({quoted}[{j}]) * {float(scale)}D + 0.5D) as bigint))"
-            f" as double) / cast(count(1) as double)) / {float(scale)}D"
-            for j in range(dim)
-        )
-        cents = assigned.groupBy("cell").agg(
-            F.expr(f"array({terms})").alias("centroid")
-        )
-        rows = sorted(cents.collect(), key=lambda r: r["cell"])
+        rows = _lloyd_step(vecs, rows, vec_col, scale)
     # r16: LOCALIZE the final centroids (k rows of dim doubles — the
-    # bounded state an IVF index IS, by design). Every consumer
-    # re-executed the final Lloyd aggregate otherwise: ivf_assign
-    # collects it, ivf_topk and ivfpq_residuals/ivfpq_topk each
-    # broadcast it — the vec_ann_ivfpq build ran the corpus scan +
-    # assignment + aggregate three times for one fit. The loop above
-    # already collected the final iteration's rows (executing the
-    # aggregate exactly once); the VALUES LocalRelation makes every
+    # bounded state an IVF index IS, by design). A lazy centroid frame
+    # would re-execute the final Lloyd step in every consumer:
+    # ivf_assign collects it, ivf_topk and ivfpq_residuals/ivfpq_topk
+    # each broadcast it. The loop above already holds the final rows on
+    # the driver (each step ran exactly once); the VALUES LocalRelation
+    # makes every
     # downstream collect driver-local (no job) and every broadcast
     # job-free (an eager localCheckpoint was A/B'd first and LOST on
     # single-consumer fits — text_semdedup +0.5 s, 3/3 pairs — because

@@ -81,24 +81,25 @@ def simhash_df(
     majority fold are compiled SQL strings, not per-literal Column
     chains — the Column form spent ~5k Py4J round-trips per plan BUILD
     (SCALE.md: driver-side plan construction is a scale axis; same fix
-    pattern as operators/knn.py's SRP bank). ``shiftleft(1L, j)``
+    pattern as operators/knn.py's SRP bank); the count and the 64
+    bit-count sums are ONE ``struct(...)`` aggregate expression, so the
+    agg costs one F.expr, not 65. ``shiftleft(1L, j)``
     reproduces ``_MASKS`` exactly, sign bit included; the arithmetic is
     identical, so fingerprints are bit-identical to the old form
     (pinned by test_simhash_df_equals_column_form)."""
     exploded = docs.select(
         F.col(id_col).alias("_id"), F.explode(F.col(tokens_col)).alias("_t")
     ).select("_id", (hash_fn or F.xxhash64)(F.col("_t")).alias("_h"))
-    aggs = [
-        F.expr(
-            f"sum(cast((_h & shiftleft(1L, {j})) != 0 as long))"
-        ).alias(f"_c{j}")
+    counts = ", ".join(
+        f"sum(cast((_h & shiftleft(1L, {j})) != 0 as long)) AS _c{j}"
         for j in range(_BITS)
-    ]
+    )
     counted = exploded.groupBy("_id").agg(
-        F.count(F.lit(1)).alias("_n"), *aggs
+        F.expr(f"struct(count(1) AS _n, {counts})").alias("_s")
     )
     majority = " | ".join(
-        f"(CASE WHEN _c{j} * 2 > _n THEN shiftleft(1L, {j}) ELSE 0L END)"
+        f"(CASE WHEN _s._c{j} * 2 > _s._n THEN shiftleft(1L, {j}) "
+        "ELSE 0L END)"
         for j in range(_BITS)
     )
     return counted.select(

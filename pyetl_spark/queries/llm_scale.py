@@ -437,7 +437,12 @@ def multimodal_features(spark: SparkSession, sf_dir: str) -> DataFrame:
         extract_features,
     )
 
-    docs = load_tables(spark, sf_dir).documents
+    # Sort BEFORE the Python stage: the range-partition sampler then
+    # scans documents only, and mapInPandas runs once, in the stage after
+    # the exchange. Sorting the features instead ran it twice (sampler +
+    # map stage). Range partitions stay in key order through the narrow
+    # mapInPandas, so sorting within partitions restores the total order.
+    docs = load_tables(spark, sf_dir).documents.orderBy("doc_id")
     feats = extract_features(attach_fake_media(docs))
     # declared surface serializes the vector (array cells break the
     # driver's pandas canon); the operator itself stays array-native
@@ -454,7 +459,7 @@ def multimodal_features(spark: SparkSession, sf_dir: str) -> DataFrame:
                 ),
             ),
         ).alias("features_fp6"),
-    ).orderBy("media_id")
+    ).sortWithinPartitions("media_id")
 
 
 def _sq_sql(a: str, c: str, dim: int = 64) -> str:

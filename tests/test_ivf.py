@@ -2,6 +2,8 @@
 
 from __future__ import annotations
 
+import os
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -13,7 +15,7 @@ from pyetl_spark.operators.ivf import (
 )
 from pyetl_spark.operators.knn import cosine_topk_bruteforce
 from pyetl_spark.tables import load_tables
-from tests.conftest import SF_ORACLE
+from tests.conftest import SF_ORACLE, SF_SMOKE
 
 
 @pytest.fixture(scope="module")
@@ -206,8 +208,10 @@ def test_localize_rows_exact_roundtrip_and_no_jobs(spark):
     """localize_rows (r16) rebuilds bounded index state as a VALUES
     LocalRelation: values/types must round-trip EXACTLY (doubles via
     repr + correctly-rounded literal parsing, incl. subnormal-ish and
-    scientific-notation magnitudes), and collecting the result must
-    schedule no Spark job (the whole point vs createDataFrame)."""
+    scientific-notation magnitudes; NaN/±Inf via sql_double's casts,
+    which bare repr would spell as the identifiers nan/inf), and
+    collecting the result must schedule no Spark job (the whole point
+    vs createDataFrame)."""
     from pyspark.sql.types import (
         ArrayType,
         DoubleType,
@@ -228,6 +232,7 @@ def test_localize_rows_exact_roundtrip_and_no_jobs(spark):
         (0, [0.1, -0.0, 1e-17, 123456.789]),
         (1, [float.fromhex("0x1.fffffffffffffp+1"), -2.5e300, 0.0]),
         (2, None),
+        (3, [float("nan"), float("inf"), float("-inf"), -0.0]),
     ]
     df = localize_rows(spark, vals, schema)
     assert [str(f.dataType) for f in df.schema.fields] == [
@@ -269,3 +274,101 @@ def test_localize_rows_empty_and_unsupported(spark):
             [("s",)],
             StructType([StructField("x", StringType())]),
         )
+
+
+def _kmeans_fit_exact_sql_reference(corpus, k, iters, scale):
+    """The SQL-aggregate Lloyd loop ``kmeans_fit_exact`` ran before its
+    Arrow kernel, kept as the reference the kernel must reproduce bit for
+    bit: phash60-spread seeds, JVM-side assignment, and one groupBy(cell)
+    whose per-dimension means are exact integer fixed-point sums
+    descaled as (Σq / n) / scale. Returns {cell: centroid}."""
+    import pyetl_spark.operators.ivf as ivf
+    from pyetl_spark.parity import phash60
+
+    h = phash60(F.col("vec_id"))
+    best = F.min(
+        F.struct(h.alias("h"), F.col("vec_id").alias("i"),
+                 F.col("e").alias("v"))
+    )
+    per_bucket = (
+        corpus.groupBy(F.pmod(h, F.lit(k)).alias("bucket"))
+        .agg(best.alias("b"))
+        .select("bucket", F.col("b.v").alias("centroid"))
+    )
+    rows = [
+        {"cell": i, "centroid": r["centroid"]}
+        for i, r in enumerate(
+            sorted(per_bucket.collect(), key=lambda r: r["bucket"])
+        )
+    ]
+    for _ in range(iters):
+        assigned = ivf._nearest_cell_rows(
+            corpus.select("vec_id", "e"), rows, "e"
+        )
+        terms = ", ".join(
+            f"(cast(sum(cast(signum(e[{j}]) * "
+            f"floor(abs(e[{j}]) * {float(scale)}D + 0.5D) as bigint))"
+            f" as double) / cast(count(1) as double)) / {float(scale)}D"
+            for j in range(len(rows[0]["centroid"]))
+        )
+        cents = assigned.groupBy("cell").agg(
+            F.expr(f"array({terms})").alias("centroid")
+        )
+        rows = sorted(cents.collect(), key=lambda r: r["cell"])
+    return {int(r["cell"]): list(r["centroid"]) for r in rows}
+
+
+@pytest.mark.parametrize("k", [3, 8, 20])
+@pytest.mark.parametrize("parts", [1, 7])
+def test_kmeans_fit_exact_kernel_matches_sql_reference(
+    spark, corpus, k, parts
+):
+    """The Arrow-kernel Lloyd step (numpy assignment + int64 fixed-point
+    partials + treeReduce + driver descale) must give exactly the
+    centroids of the SQL-aggregate loop it replaced, at k on both sides
+    of _KERNEL_MIN_K and for any partitioning of the input."""
+    from pyetl_spark.operators.ivf import KMEANS_SCALE, kmeans_fit_exact
+
+    split = (
+        corpus.coalesce(1)
+        if parts == 1
+        else corpus.repartitionByRange(parts, "vec_id")
+    )
+    want = _kmeans_fit_exact_sql_reference(split, k, 2, KMEANS_SCALE)
+    got = {
+        r["cell"]: list(r["centroid"])
+        for r in kmeans_fit_exact(split, k=k, iters=2).collect()
+    }
+    assert sorted(got) == sorted(want)
+    for cell, cent in want.items():
+        assert [x.hex() for x in got[cell]] == [x.hex() for x in cent]
+
+
+def test_kmeans_fit_exact_job_count(spark):
+    """Seeding is one aggregate collect (two jobs under AQE) and each
+    Lloyd iteration exactly one job (the Arrow stage + treeReduce)."""
+    from pyetl_spark.operators.ivf import kmeans_fit_exact
+
+    sf001 = os.path.join(os.path.dirname(SF_SMOKE), "sf0.01")
+    e = load_tables(spark, sf001).embeddings
+    v = e.select(
+        "vec_id",
+        F.transform("embedding", lambda x: x.cast("double")).alias("e"),
+    )
+    sc = spark.sparkContext
+    iters = 2
+    sc.setJobGroup("kmeans_fit_exact_jobs", "job-count pin")
+    try:
+        kmeans_fit_exact(v, k=8, iters=iters)
+    finally:
+        sc._jsc.clearJobGroup()
+    jobs = sc.statusTracker().getJobIdsForGroup("kmeans_fit_exact_jobs")
+    assert 0 < len(jobs) <= 2 + iters
+
+
+def test_kmeans_fit_exact_empty_corpus_raises(spark):
+    from pyetl_spark.operators.ivf import kmeans_fit_exact
+
+    empty = spark.createDataFrame([], "vec_id long, e array<double>")
+    with pytest.raises(ValueError, match="centroids DataFrame is empty"):
+        kmeans_fit_exact(empty, k=4, iters=1)

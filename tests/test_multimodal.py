@@ -280,3 +280,48 @@ def test_ahash_pairs_only_between_identical_texts(spark, sf_dir):
     same = labeled.filter(F.col("ta") == F.col("tb")).count()
     assert cross == 0, f"{cross} cross-text hamming<=3 pairs"
     assert same > 0  # the planted re-ingests must actually pair
+
+
+def test_multimodal_features_sorted_with_one_python_stage(spark):
+    """multimodal_features sorts the documents BEFORE its mapInPandas
+    and only sorts within partitions after it: with 8 range partitions
+    the collected rows are still in media_id order, and of all the
+    stages one call runs (build and collect), exactly one evaluates
+    Python — a sort after the Python stage would run it a second time
+    in the range sampler."""
+    from pyetl_spark import registry
+
+    registry.load_all()
+    sc = spark.sparkContext
+    jvm_sc = sc._jsc.sc()
+    graph = spark._jvm.org.apache.spark.ui.scope.RDDOperationGraph
+    confs = {
+        "spark.sql.shuffle.partitions": "8",
+        "spark.sql.adaptive.coalescePartitions.enabled": "false",
+    }
+    old = {k: spark.conf.get(k) for k in confs}
+    for k, v in confs.items():
+        spark.conf.set(k, v)
+    sc.setJobGroup("multimodal_features_stages", "python-stage pin")
+    try:
+        rows = registry.QUERIES["multimodal_features"](
+            spark, SF_ORACLE
+        ).collect()
+    finally:
+        sc._jsc.clearJobGroup()
+        for k, v in old.items():
+            spark.conf.set(k, v)
+    ids = [r["media_id"] for r in rows]
+    assert ids and ids == sorted(ids)
+    jvm_sc.listenerBus().waitUntilEmpty()
+    store = jvm_sc.statusStore()
+    tracker = sc.statusTracker()
+    python_stages = [
+        s
+        for j in tracker.getJobIdsForGroup("multimodal_features_stages")
+        for s in tracker.getJobInfo(j).stageIds
+        if store.lastStageAttempt(s).status().toString() != "SKIPPED"
+        and "MapInPandas"
+        in graph.makeDotFile(store.operationGraphForStage(s))
+    ]
+    assert len(python_stages) == 1
