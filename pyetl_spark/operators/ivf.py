@@ -1,20 +1,21 @@
-"""IVF (inverted-file) approximate nearest-neighbor search + the
-deterministic distributed k-means that builds its cells (north-star
-similarity-search scale path, complementing SRP-LSH in knn.py).
+"""IVF (inverted-file) approximate nearest-neighbor search and the
+deterministic distributed k-means that builds its cells (the
+similarity-search scale path, next to SRP-LSH in knn.py).
 
 IVF beats hash-based LSH when the corpus is clustered: k-means cells adapt
 to the data, so nearest-cell search prunes to the dense regions a probe
 actually lives in. Pipeline:
 
-1. ``kmeans_fit`` / ``kmeans_fit_exact``: deterministic seeds (hash
-   spread, no rand()), then a fixed number of Lloyd iterations.
-   ``kmeans_fit`` updates with posexplode + per-(cell, dim) means as
-   DataFrame ops; ``kmeans_fit_exact`` (the oracle-replayable form every
-   ANN/semdedup key uses) runs each iteration as ONE Arrow stage — a
-   per-partition numpy kernel assigns every vector to its nearest
-   centroid and sums its fixed-point coordinates per cell — whose
-   O(k×dim) partials ``RDD.treeReduce`` folds before the driver descales
-   them into the next centroids.
+1. ``kmeans_fit_exact``: phash60-spread seeds (one SQL aggregate, md5
+   based, no rand()), then a fixed number of Lloyd iterations. Each
+   iteration is ONE Arrow stage (``_lloyd_step``): a per-partition numpy
+   kernel assigns every vector to its nearest centroid and sums its
+   fixed-point coordinates per cell, ``RDD.treeReduce`` folds the
+   O(k×dim) partials, and the driver descales them into the next
+   centroids. The same kernel trains product quantization's m codebooks
+   in one pass (pq.pq_fit_exact); a k-means fit is its one-subspace
+   case. Every step is a fixed IEEE sequence a DuckDB oracle replays bit
+   for bit, which is what lets the ANN keys hash-match.
 2. ``ivf_assign``: tag each corpus vector with its nearest cell id.
 3. ``ivf_topk``: probe → nearest ``nprobe`` cells → exact cosine re-rank
    within the union of those cells only.
@@ -33,24 +34,14 @@ import pandas as pd
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from pyetl_spark.operators.knn import _dot, _norm_sq
+
 
 def _sq_dist(a, b):
     return F.aggregate(
         F.zip_with(a, b, lambda x, y: (x - y) * (x - y)),
         F.lit(0.0),
         lambda acc, x: acc + x,
-    )
-
-
-def _norm_sq(col):
-    return F.aggregate(
-        F.transform(col, lambda x: x * x), F.lit(0.0), lambda a, x: a + x
-    )
-
-
-def _dot(a, b):
-    return F.aggregate(
-        F.zip_with(a, b, lambda x, y: x * y), F.lit(0.0), lambda a2, x: a2 + x
     )
 
 
@@ -129,12 +120,6 @@ def localize_rows(spark, rows, schema) -> DataFrame:
     return spark.sql(f"SELECT {cols} FROM VALUES {vals}")
 
 
-def localize_bounded(df: DataFrame) -> DataFrame:
-    """Collect a BOUNDED frame and rebuild it as a VALUES LocalRelation
-    (see ``localize_rows`` for the why and the exactness argument)."""
-    return localize_rows(df.sparkSession, df.collect(), df.schema)
-
-
 #: Above this k, nearest-centroid assignment switches from the inlined
 #: JVM expression to the Arrow kernel: higher-order array functions
 #: evaluate their lambda per ELEMENT (interpreted, boxed), so the
@@ -142,35 +127,6 @@ def localize_bounded(df: DataFrame) -> DataFrame:
 #: centroid table, pathological once k scales with the corpus
 #: (semdedup's k ∝ n contract; measured: 310 s vs 40 s at sf3).
 _KERNEL_MIN_K = 17
-
-
-def _nearest_cell(vec_df: DataFrame, centroids: DataFrame, vec_col: str):
-    """Attach (cell, dist) of the nearest centroid to every row.
-
-    The k centroids are collected to the driver (k×dim doubles — the
-    bounded state an IVF index IS, by design) and shipped into a single
-    stateless projection; no shuffle, no join, at any k. Two physical
-    forms with BIT-IDENTICAL results:
-
-    - k < _KERNEL_MIN_K: centroids inlined as two aligned array
-      literals; zip the k (centroid, cell) pairs into (dist, cell)
-      structs and take ``array_min`` — wholly JVM-side, keeps the ANN
-      keys' plans Python-free.
-    - k ≥ _KERNEL_MIN_K: Arrow-batched numpy kernel. The distance loop
-      accumulates over the DIMENSION axis in ascending order — the same
-      IEEE add sequence as the zip_with/aggregate expression — and
-      argmin's first-minimum tie-break equals the struct form's
-      lexicographic (dist, cell) min because cells are sorted ascending.
-      Vectorized C replaces per-element interpreted lambdas.
-
-    Both forms replace the original crossJoin(broadcast) + window-rank —
-    an n×k-row sort keyed on embedding arrays that the r5 sf0.1→1→3
-    scaling curve caught dominating the operator once k grew."""
-    rows = sorted(
-        centroids.select("cell", "centroid").collect(),
-        key=lambda r: r["cell"],
-    )
-    return _nearest_cell_rows(vec_df, rows, vec_col)
 
 
 def _nearest_rows(E: np.ndarray, C: np.ndarray):
@@ -207,209 +163,92 @@ def _centroid_matrix(rows):
     return cells, C
 
 
-def _nearest_cell_rows(vec_df: DataFrame, rows, vec_col: str):
-    """``_nearest_cell`` body over already-collected centroid rows
-    (sorted by cell).
+def _nearest_structs(books, vec_col: str) -> list:
+    """One struct Column (fields ``cell``, ``dist``) per subspace: the
+    codeword of ``books[j]`` — a ``(cells, C)`` pair, C ordered by cell —
+    nearest to slice j of ``vec_col`` (the whole vector when there is
+    one subspace, as in IVF). No shuffle, no join, at any k: the codebooks are the
+    bounded driver state an index IS, shipped into one stateless
+    projection. Two physical forms with BIT-IDENTICAL results, picked by
+    the largest codebook:
 
-    The JVM form is ONE ``F.expr`` string — cell ids, centroids (via
-    ``sql_double``) and the whole ``array_min(zip_with(…))`` distance —
-    so its plan build costs a handful of Py4J calls at any k×dim, not
-    one per centroid coordinate. Lambda variables carry a leading
-    underscore so they cannot shadow the vector column."""
-    cells, C = _centroid_matrix(rows)
-    if len(cells) < _KERNEL_MIN_K:
+    - k < _KERNEL_MIN_K: ONE ``F.expr`` string per subspace — cell ids,
+      centroids (via ``sql_double``) and the whole
+      ``array_min(zip_with(…))`` distance — so the plan stays
+      Python-free and its build costs a handful of Py4J calls at any
+      k×dim, not one per coordinate. Lambda variables carry a leading
+      underscore so they cannot shadow the vector column.
+    - k ≥ _KERNEL_MIN_K: one Arrow-batched numpy kernel per subspace
+      (``_nearest_rows``). Its distance loop is the expression's IEEE
+      add sequence, and argmin's first-minimum tie-break equals the
+      struct form's lexicographic (dist, cell) min because cells are
+      sorted ascending. Vectorized C replaces per-element interpreted
+      lambdas.
+
+    Both forms replace the original crossJoin(broadcast) + window-rank —
+    an n×k-row sort keyed on embedding arrays that the r5 sf0.1→1→3
+    scaling curve caught dominating the operator once k grew."""
+    d = books[0][1].shape[1]
+    if max(len(cells) for cells, _ in books) < _KERNEL_MIN_K:
         x = "`" + vec_col.replace("`", "``") + "`"
-        cents = ", ".join(
-            "array(" + ", ".join(sql_double(v) for v in c) + ")" for c in C
-        )
-        ids = ", ".join(str(c) for c in cells)
-        best = F.expr(
-            f"array_min(zip_with(array({cents}), array({ids}), "
-            f"(_cv, _cid) -> struct(aggregate(zip_with({x}, _cv, "
-            f"(_x, _y) -> (_x - _y) * (_x - _y)), 0.0D, "
-            f"(_acc, _t) -> _acc + _t) AS dist, _cid AS cell)))"
-        )
-    else:
-        from pyspark.sql.functions import pandas_udf
+        out = []
+        for j, (cells, C) in enumerate(books):
+            xs = x if len(books) == 1 else f"slice({x}, {j * d + 1}, {d})"
+            cents = ", ".join(
+                "array(" + ", ".join(sql_double(v) for v in c) + ")"
+                for c in C
+            )
+            ids = ", ".join(str(c) for c in cells)
+            out.append(F.expr(
+                f"array_min(zip_with(array({cents}), array({ids}), "
+                f"(_cv, _cid) -> struct(aggregate(zip_with({xs}, _cv, "
+                f"(_x, _y) -> (_x - _y) * (_x - _y)), 0.0D, "
+                f"(_acc, _t) -> _acc + _t) AS dist, _cid AS cell)))"
+            ))
+        return out
+    from pyspark.sql.functions import pandas_udf
 
-        _ship_module_by_value()
+    _ship_module_by_value()
 
+    def kernel(cells, C, lo):
         @pandas_udf("cell int, dist double")
         def _assign(v: pd.Series) -> pd.DataFrame:
             if len(v) == 0:
                 return pd.DataFrame({"cell": pd.array([], dtype="int32"),
                                      "dist": pd.array([], dtype="float64")})
-            hit, dist = _nearest_rows(_vectors(v), C)
+            hit, dist = _nearest_rows(_vectors(v)[:, lo:lo + d], C)
             return pd.DataFrame(
                 {"cell": cells[hit].astype("int32"), "dist": dist}
             )
 
-        best = _assign(F.col(vec_col))
-    # two projections, not one: the second only reads fields of the
-    # first's struct, so the distance expression is evaluated once
+        return _assign(F.col(vec_col))
+
+    return [kernel(cells, C, j * d) for j, (cells, C) in enumerate(books)]
+
+
+def _nearest_cell(vec_df: DataFrame, centroids, vec_col: str):
+    """Attach (cell, dist) of the nearest centroid to every row.
+    ``centroids`` is a (cell, centroid) DataFrame, collected to the
+    driver (k×dim doubles), or already-collected rows.
+
+    Two projections, not one: the second only reads fields of the
+    first's struct, so the distance is evaluated once. ``cell`` is
+    non-nullable (the fallback never fires: the centroid array is a
+    non-empty literal), so a join on it infers no ``isnotnull`` filter —
+    that filter would be pushed below the projection and run the whole
+    assignment a second time."""
+    if isinstance(centroids, DataFrame):
+        centroids = centroids.select("cell", "centroid").collect()
+    rows = sorted(centroids, key=lambda r: r["cell"])
+    (best,) = _nearest_structs([_centroid_matrix(rows)], vec_col)
     keep = [
         F.col("`" + c.replace("`", "``") + "`")
         for c in vec_df.columns
         if c not in ("cell", "dist")
     ]
     return vec_df.select(*keep, best.alias("_best")).select(
-        *keep, "_best.cell", "_best.dist"
+        *keep, F.coalesce("_best.cell", F.lit(-1)).alias("cell"), "_best.dist"
     )
-
-
-def seed_centroids(
-    corpus: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "e",
-    k: int = 8,
-    spread: bool = True,
-) -> DataFrame:
-    """Deterministic seed selection → DataFrame(cell, centroid).
-
-    ``spread=True`` (default): hash-spread seeding — bucket vectors by
-    ``pmod(xxhash64(id), k)`` and take the min-hash vector of each bucket.
-    xxhash64 decorrelates the choice from id order (adjacent ids — often
-    adjacent in insert/time order, hence correlated in vector space — land
-    in different buckets), approximating a uniform corpus sample with ONE
-    aggregation and no rand(). Empty buckets (k close to n) are re-labeled
-    densely so cells stay 0..k'-1.
-
-    ``spread=False``: the k lowest-id vectors — kept for comparison tests;
-    degenerates badly when id order correlates with position.
-    """
-    if not spread:
-        return (
-            corpus.orderBy(id_col)
-            .limit(k)
-            .select(F.col(vec_col).alias("centroid"))
-            .withColumn(
-                "cell", F.row_number().over(Window.orderBy(F.lit(1))) - 1
-            )
-            .select("cell", "centroid")
-        )
-    h = F.xxhash64(F.col(id_col))
-    best = F.min(F.struct(h.alias("h"), F.col(vec_col).alias("v")))
-    per_bucket = (
-        corpus.groupBy(F.pmod(h, F.lit(k)).alias("bucket"))
-        .agg(best.alias("b"))
-        .select("bucket", F.col("b.v").alias("centroid"))
-    )
-    # dense re-label in bucket order → stable cell ids even with gaps
-    return per_bucket.select(
-        (F.row_number().over(Window.orderBy("bucket")) - 1).alias("cell"),
-        "centroid",
-    )
-
-
-def seed_centroids_farthest(
-    corpus: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "e",
-    k: int = 8,
-) -> DataFrame:
-    """Deterministic farthest-point (Gonzalez / k-center) seeding →
-    DataFrame(cell, centroid) — the greedy, replayable stand-in for
-    k-means++'s D² sampling.
-
-    Seed 0 is the min-xxhash64 vector (a deterministic "random" pick);
-    each subsequent seed is the vector FARTHEST from its nearest already-
-    chosen seed (ties → lowest id). Guarantees a 2-approximation to the
-    optimal k-center cover, so seeds spread across the data's extent
-    instead of landing by hash luck — measurably lower inertia and
-    better cell balance than hash-spread when the corpus is clustered.
-
-    Cost model: k-1 driver rounds, each ONE scan computing
-    min-distance-to-chosen via a `least()` over k literal arrays (k×dim
-    doubles travel in the plan, no shuffle, no join). At 100 TB run the
-    seeding on a hash-sample (~1M rows) — Lloyd refinement on the full
-    corpus erases sampling noise; only the scan cost changes."""
-    first = (
-        corpus.select(
-            F.min(
-                F.struct(
-                    F.xxhash64(F.col(id_col)).alias("h"),
-                    F.col(vec_col).alias("v"),
-                )
-            ).alias("b")
-        )
-        .select("b.v")
-        .collect()[0]["v"]
-    )
-    chosen = [list(first)]
-    for _ in range(k - 1):
-        dists = [
-            _sq_dist(
-                F.col(vec_col), F.array(*[F.lit(float(x)) for x in c])
-            )
-            for c in chosen
-        ]
-        dmin = dists[0] if len(dists) == 1 else F.least(*dists)
-        nxt = (
-            corpus.select(F.col(id_col), F.col(vec_col), dmin.alias("d"))
-            .orderBy(F.col("d").desc(), F.col(id_col))
-            .limit(1)
-            .collect()[0]
-        )
-        chosen.append(list(nxt[vec_col]))
-    spark = corpus.sparkSession
-    return spark.createDataFrame(
-        [(i, c) for i, c in enumerate(chosen)], ["cell", "centroid"]
-    )
-
-
-def kmeans_fit(
-    corpus: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "e",
-    k: int = 8,
-    iters: int = 3,
-    spread_seeds: bool = True,
-    seeding: str | None = None,
-) -> DataFrame:
-    """Deterministic Lloyd k-means → DataFrame(cell int, centroid
-    array<double>). ``seeding``: "farthest" (Gonzalez, best quality),
-    "spread" (hash-spread, one pass), "lowid" (degenerate baseline);
-    default follows ``spread_seeds`` for backward compatibility."""
-    if seeding == "farthest":
-        seeds = seed_centroids_farthest(corpus, id_col, vec_col, k)
-    elif seeding in ("spread", "lowid"):
-        seeds = seed_centroids(
-            corpus, id_col, vec_col, k, spread=seeding == "spread"
-        )
-    else:
-        seeds = seed_centroids(corpus, id_col, vec_col, k, spread=spread_seeds)
-    centroids = seeds
-    for _ in range(iters):
-        assigned = _nearest_cell(
-            corpus.select(id_col, vec_col), centroids, vec_col
-        )
-        exploded = assigned.select(
-            "cell", F.posexplode(vec_col).alias("pos", "x")
-        )
-        means = exploded.groupBy("cell", "pos").agg(
-            (F.sum("x") / F.count(F.lit(1))).alias("m")
-        )
-        centroids = means.groupBy("cell").agg(
-            F.transform(
-                F.array_sort(F.collect_list(F.struct("pos", "m"))),
-                lambda s: s.getField("m"),
-            ).alias("centroid")
-        )
-    return centroids
-
-
-def kmeans_inertia(
-    corpus: DataFrame, centroids: DataFrame, vec_col: str = "e"
-) -> float:
-    """Sum of squared distances to assigned centroids (convergence metric).
-
-    Per-ROW semantics: duplicate embeddings each contribute their own
-    distance term (the textbook inertia). The pre-r5 crossJoin+window
-    implementation silently deduplicated identical rows; the current
-    stateless projection preserves multiplicity, so values on dup-heavy
-    corpora are higher than the old ones — intentionally."""
-    assigned = _nearest_cell(corpus.select(vec_col), centroids, vec_col)
-    return assigned.agg(F.sum("dist").alias("i")).collect()[0]["i"]
 
 
 def ivf_assign(
@@ -440,6 +279,21 @@ def cell_size_stats(indexed_corpus: DataFrame) -> DataFrame:
     )
 
 
+def _probe_cells(
+    probes: DataFrame, centroids: DataFrame, nprobe: int, probe_id: str,
+    probe_vec: str,
+) -> DataFrame:
+    """Each probe row joined to its ``nprobe`` nearest centroids (ties →
+    lowest cell); the centroid table is broadcast."""
+    pc = probes.crossJoin(F.broadcast(centroids)).withColumn(
+        "_d", _sq_dist(F.col(probe_vec), F.col("centroid"))
+    )
+    w = Window.partitionBy(probe_id).orderBy(F.col("_d"), F.col("cell"))
+    return pc.withColumn("_rn", F.row_number().over(w)).filter(
+        F.col("_rn") <= nprobe
+    )
+
+
 def ivf_topk(
     probes: DataFrame,
     indexed_corpus: DataFrame,
@@ -455,15 +309,9 @@ def ivf_topk(
 
     `indexed_corpus` = ivf_assign output with (cand_id, cand_vec, cell).
     """
-    pc = probes.crossJoin(F.broadcast(centroids)).withColumn(
-        "_d", _sq_dist(F.col(probe_vec), F.col("centroid"))
-    )
-    w = Window.partitionBy(probe_id).orderBy(F.col("_d"), F.col("cell"))
-    probe_cells = (
-        pc.withColumn("_rn", F.row_number().over(w))
-        .filter(F.col("_rn") <= nprobe)
-        .select(probe_id, probe_vec, "cell")
-    )
+    probe_cells = _probe_cells(
+        probes, centroids, nprobe, probe_id, probe_vec
+    ).select(probe_id, probe_vec, "cell")
     cands = probe_cells.join(indexed_corpus, "cell").filter(
         F.col(cand_id) != F.col(probe_id)
     )
@@ -483,56 +331,117 @@ def ivf_topk(
     )
 
 
-def _lloyd_step(vecs: DataFrame, rows, vec_col: str, scale: int):
-    """One exact Lloyd iteration → the next centroid rows (sorted by
-    cell, empty cells dropped), in ONE Spark job.
+def _lloyd_step(vecs: DataFrame, books, vec_col: str, scale: int):
+    """One exact Lloyd iteration over m subspaces at once → the next
+    codebooks, in ONE Spark job. ``books[j]`` holds subspace j's centroid
+    rows sorted by cell, and subspace j is slice j of ``vec_col`` (the
+    whole vector when m = 1: k-means). Returns the same shape with empty
+    cells dropped, so subspaces may end with different cell counts.
 
-    A ``mapInPandas`` kernel assigns each vector of a partition to its
-    nearest centroid (``_nearest_rows``) and sums the fixed-point
-    coordinates ``sign(x)·floor(|x|·scale + 0.5)`` per cell as int64,
-    with the member count; it emits one k×dim partial per partition.
-    ``RDD.treeReduce`` folds the partials, so the driver holds O(k×dim)
-    at any partition count. Integer sums are order-free, and the descale
-    ``(float(Σq) / float(n)) / scale`` is the IEEE operation sequence
-    of the SQL mean it replaced — bit-identical centroids. A NaN/±Inf
-    coordinate raises, as the SQL form's ANSI cast to bigint did."""
-    cells, C = _centroid_matrix(rows)
-    k, dim = C.shape
+    A ``mapInPandas`` kernel assigns each vector's m subvectors to their
+    nearest centroids (``_nearest_rows``) and sums the fixed-point
+    coordinates ``sign(x)·floor(|x|·scale + 0.5)`` per (subspace, cell)
+    as int64, with the member counts; it emits one m×k×d partial per
+    partition. ``RDD.treeReduce`` folds the partials, so the driver holds
+    O(m×k×d) at any partition count. Integer sums are order-free, and the
+    descale ``(float(Σq) / float(n)) / scale`` is the IEEE operation
+    sequence of the SQL mean it replaced — bit-identical centroids.
+
+    Where the SQL form's ANSI casts raised, this raises ValueError: for a
+    coordinate whose fixed-point value is not an int64 (NaN, ±Inf or
+    |x|·scale ≥ 2⁶³), and for a cell whose Σ|q| reaches 2⁶², past which
+    its int64 sums could wrap (the bound is summed in float; the factor
+    of two absorbs its rounding)."""
+    mats = [_centroid_matrix(rows) for rows in books]
+    m, k, d = len(mats), max(len(c) for c, _ in mats), mats[0][1].shape[1]
     fscale = float(scale)
 
     def partial(batches):
-        q_sum = np.zeros((k, dim), dtype=np.int64)
-        n = np.zeros(k, dtype=np.int64)
+        q_sum = np.zeros((m, k, d), dtype=np.int64)
+        n = np.zeros((m, k), dtype=np.int64)
+        q_abs = np.zeros((m, k), dtype=np.float64)
         for pdf in batches:
             if len(pdf) == 0:
                 continue
             E = _vectors(pdf[vec_col])
-            if not np.isfinite(E).all():
-                raise ValueError(
-                    "kmeans_fit_exact: NaN/Inf coordinate has no "
-                    "fixed-point value"
-                )
-            hit, _ = _nearest_rows(E, C)
             q = np.sign(E) * np.floor(np.abs(E) * fscale + 0.5)
-            np.add.at(q_sum, hit, q.astype(np.int64))
-            n += np.bincount(hit, minlength=k)
-        yield pd.DataFrame({"q": [q_sum.ravel()], "n": [n]})
+            if not (np.abs(q) < 2.0**63).all():
+                raise ValueError(
+                    f"Lloyd step: a NaN/Inf coordinate, or one with "
+                    f"|x|·{scale} ≥ 2^63, has no int64 fixed-point value"
+                )
+            for j, (_, C) in enumerate(mats):
+                qj = q[:, j * d:(j + 1) * d]
+                hit, _ = _nearest_rows(E[:, j * d:(j + 1) * d], C)
+                np.add.at(q_sum[j], hit, qj.astype(np.int64))
+                n[j] += np.bincount(hit, minlength=k)
+                q_abs[j] += np.bincount(
+                    hit, np.abs(qj).max(axis=1), minlength=k
+                )
+        yield pd.DataFrame(
+            {"q": [q_sum.ravel()], "n": [n.ravel()], "a": [q_abs.ravel()]}
+        )
 
     _ship_module_by_value()
-    q_sum, n = (
-        vecs.mapInPandas(partial, "q array<bigint>, n array<bigint>")
-        .rdd.map(lambda r: (np.array(r.q, np.int64), np.array(r.n, np.int64)))
-        .treeReduce(lambda a, b: (a[0] + b[0], a[1] + b[1]))
+    q_sum, n, q_abs = (
+        vecs.mapInPandas(
+            partial, "q array<bigint>, n array<bigint>, a array<double>"
+        )
+        .rdd.map(lambda r: tuple(np.array(x) for x in r))
+        .treeReduce(lambda a, b: tuple(x + y for x, y in zip(a, b)))
     )
-    live = n > 0
-    means = (
-        q_sum.reshape(k, dim)[live].astype(np.float64)
-        / n[live, None].astype(np.float64)
-    ) / fscale
-    return [
-        {"cell": int(c), "centroid": m.tolist()}
-        for c, m in zip(cells[live], means)
-    ]
+    if (q_abs >= 2.0**62).any():
+        raise ValueError(
+            f"Lloyd step: a cell's fixed-point coordinate sum at scale "
+            f"{scale} could overflow int64"
+        )
+    q_sum, n = q_sum.reshape(m, k, d), n.reshape(m, k)
+    out = []
+    for j, (cells, _) in enumerate(mats):
+        live = n[j, :len(cells)] > 0
+        means = (
+            q_sum[j, :len(cells)][live].astype(np.float64)
+            / n[j, :len(cells)][live, None].astype(np.float64)
+        ) / fscale
+        out.append([
+            {"cell": int(c), "centroid": mu.tolist()}
+            for c, mu in zip(cells[live], means)
+        ])
+    return out
+
+
+def _seed_books(df: DataFrame, h, k: int, m: int, id_col: str, vec_col: str):
+    """Hash-spread seeds in ``_lloyd_step``'s books shape: per subspace
+    (column ``sub`` when m > 1), the (h, id)-min vector of each of the k
+    buckets pmod(h, k), relabeled densely in bucket order — one SQL
+    aggregate, no rand().
+
+    r16 / ADVICE r16: the dense relabel runs DRIVER-SIDE over the
+    collected ≤ m·k seed rows instead of a ``row_number()`` window —
+    that window was the bench tail's "No Partition Defined" WindowExec
+    warning source (21 per vec_ann_ivf bench key) and forced an
+    exchange for a frame that is bounded by construction. Numbering is
+    identical: the sorted-by-bucket index is the row_number in bucket
+    order (buckets are distinct post-groupBy). The collect also seeds
+    the first Lloyd step, which would otherwise collect the same frame
+    again."""
+    sub = F.col("sub") if m > 1 else F.lit(0)  # a literal key is dropped
+    best = F.min(
+        F.struct(
+            h.alias("h"), F.col(id_col).alias("i"), F.col(vec_col).alias("v")
+        )
+    )
+    seeds = (
+        df.groupBy(sub.alias("sub"), F.pmod(h, F.lit(k)).alias("bucket"))
+        .agg(best.alias("b"))
+        .select("sub", "bucket", F.col("b.v").alias("centroid"))
+        .collect()
+    )
+    books = [[] for _ in range(m)]
+    for r in sorted(seeds, key=lambda r: (r["sub"], r["bucket"])):
+        book = books[r["sub"]]
+        book.append({"cell": len(book), "centroid": r["centroid"]})
+    return books
 
 
 #: fixed-point quantization for the exact Lloyd means — the SINGLE
@@ -551,95 +460,50 @@ def kmeans_fit_exact(
     scale: int = KMEANS_SCALE,
 ) -> DataFrame:
     """Oracle-replayable Lloyd k-means → DataFrame(cell int, centroid
-    array<double>) — the r7 cross-engine-exact variant of ``kmeans_fit``
-    (same family as pca.top_component_exact):
+    array<double>), the one k-means fit every ANN/semdedup key uses:
 
-    - seeds are phash60-spread (md5-based, bit-identical on DuckDB)
-      instead of xxhash64-spread: bucket = phash60(id) % k, seed = the
-      bucket's (hash, id)-min vector, cells relabeled densely in bucket
-      order;
+    - seeds are phash60-spread (md5-based, bit-identical on DuckDB):
+      bucket = phash60(id) % k, seed = the bucket's (hash, id)-min
+      vector, cells relabeled densely in bucket order;
     - each Lloyd mean is computed from EXACT integer sums of fixed-point
       quantized coordinates (round-half-away at ``scale``), then
-      descaled with a fixed float expression
-      ((Σq / n) / scale) — order-free under any partitioning, unlike
-      float sums;
+      descaled with a fixed float expression ((Σq / n) / scale) —
+      order-free under any partitioning, unlike float sums; centroids
+      are quantized to ``scale`` precision between iterations
+      (immaterial for clustering quality at 1e-4 of the data range);
     - assignment is ``_nearest_rows``' numpy kernel, bit-identical to
       ``_nearest_cell``'s JVM expression: the same ascending-dimension
       add sequence a SQL oracle replays verbatim, the same lowest-cell
       tie-break;
     - empty cells drop out (a cell no vector chose has no mean), so the
-      returned cell ids may have gaps; an empty corpus raises.
+      returned cell ids may have gaps; an empty corpus raises."""
+    from pyspark.sql.types import StructType
 
-    Trade-off vs ``kmeans_fit``: centroids are quantized to ``scale``
-    precision between iterations (immaterial for clustering quality at
-    1e-4 of the data range) and seeds hash differently, so cell
-    compositions differ from the xxhash64 variant — callers that need
-    driver-hash evidence use THIS form; xxhash64 stays the default at
-    scale."""
     from pyetl_spark.parity import phash60
 
-    h = phash60(F.col(id_col))
-    best = F.min(
-        F.struct(
-            h.alias("h"), F.col(id_col).alias("i"), F.col(vec_col).alias("v")
-        )
+    books = _seed_books(
+        corpus, phash60(F.col(id_col)), k, 1, id_col, vec_col
     )
-    per_bucket = (
-        corpus.groupBy(F.pmod(h, F.lit(k)).alias("bucket"))
-        .agg(best.alias("b"))
-        .select("bucket", F.col("b.v").alias("centroid"))
-    )
-    # r16: the dense cell relabel runs DRIVER-SIDE over the collected
-    # ≤k seed rows instead of a `row_number() OVER (ORDER BY bucket)`
-    # window — that window was the bench tail's "No Partition Defined"
-    # WindowExec warning source (VERDICT r15 item 9; 21 warnings per
-    # vec_ann_ivf bench key, one per fit execution) and forced a
-    # single-partition exchange per fit for a frame that is bounded by
-    # construction. Numbering is identical: sorted-by-bucket index ==
-    # row_number in bucket order (buckets are distinct post-groupBy).
-    # The collect also seeds the Lloyd loop below, which previously
-    # collected the same frame again on its first iteration — one job
-    # saved per fit.
-    rows = [
-        {"cell": i, "centroid": r["centroid"]}
-        for i, r in enumerate(
-            sorted(per_bucket.collect(), key=lambda r: r["bucket"])
-        )
-    ]
     # Lloyd steps run as numpy kernels (_lloyd_step), not as a SQL
     # groupBy: interpreted zip_with/aggregate lambdas plus a 64-term mean
     # aggregate made each iteration's collect cost about twice its jobs'
     # run time. Seeding stays SQL — a Python seeding kernel was slower.
     vecs = corpus.select(vec_col)
     for _ in range(iters):
-        rows = _lloyd_step(vecs, rows, vec_col, scale)
+        books = _lloyd_step(vecs, books, vec_col, scale)
     # r16: LOCALIZE the final centroids (k rows of dim doubles — the
     # bounded state an IVF index IS, by design). A lazy centroid frame
     # would re-execute the final Lloyd step in every consumer:
     # ivf_assign collects it, ivf_topk and ivfpq_residuals/ivfpq_topk
     # each broadcast it. The loop above already holds the final rows on
     # the driver (each step ran exactly once); the VALUES LocalRelation
-    # makes every
-    # downstream collect driver-local (no job) and every broadcast
-    # job-free (an eager localCheckpoint was A/B'd first and LOST on
-    # single-consumer fits — text_semdedup +0.5 s, 3/3 pairs — because
-    # the pin job is pure overhead there; localization adds none).
-    from pyspark.sql.types import (
-        ArrayType,
-        DoubleType,
-        IntegerType,
-        StructField,
-        StructType,
-    )
-
-    schema = StructType(
-        [
-            StructField("cell", IntegerType()),
-            StructField("centroid", ArrayType(DoubleType())),
-        ]
-    )
+    # makes every downstream collect driver-local (no job) and every
+    # broadcast job-free (an eager localCheckpoint was A/B'd first and
+    # LOST on single-consumer fits — text_semdedup +0.5 s, 3/3 pairs —
+    # because the pin job is pure overhead there; localization adds
+    # none).
     return localize_rows(
         corpus.sparkSession,
-        [(int(r["cell"]), [float(x) for x in r["centroid"]]) for r in rows],
-        schema,
+        [(r["cell"], r["centroid"]) for r in books[0]],
+        StructType.fromDDL("cell int, centroid array<double>"),
     )

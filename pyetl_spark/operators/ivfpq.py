@@ -28,10 +28,17 @@ in queries/llm_scale._ivfpq_oracle).
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, Window
+from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-from pyetl_spark.operators.pq import _sq_dist
+from pyetl_spark.operators.ivf import _probe_cells, ivf_assign
+from pyetl_spark.operators.pq import (
+    _adc_rank,
+    _adc_table,
+    _encode,
+    _split,
+    reconstruction_mse,
+)
 
 #: build-parameter stamp carried in the codes frame's ``code`` field
 #: metadata (parquet round-trips Spark schema metadata — the same
@@ -65,31 +72,12 @@ def ivfpq_residuals(
     )
 
 
-def _split_keyed(
-    df: DataFrame, keys: list[str], vec_col: str, m: int, dim: int
+def _residuals_of(
+    vecs: DataFrame, coarse_centroids: DataFrame, id_col: str, vec_col: str
 ) -> DataFrame:
-    """(keys..., sub, v): subvector explode keeping arbitrary key cols
-    (pq.split_subvectors keeps a single id — search needs (probe, cell))."""
-    d_sub = dim // m
-    # same guard as pq.split_subvectors: a non-divisible (m, dim) would
-    # silently drop the trailing dim % m components from every probe
-    # residual (wrong rankings, no error) while the corpus-side split
-    # fails fast — build and search must agree on the failure mode
-    assert d_sub * m == dim, "m must divide dim"
-    subs = F.explode(
-        F.array(
-            *[
-                F.struct(
-                    F.lit(j).alias("sub"),
-                    F.slice(F.col(vec_col), j * d_sub + 1, d_sub).alias("v"),
-                )
-                for j in range(m)
-            ]
-        )
-    )
-    return df.select(*keys, subs.alias("s")).select(
-        *keys, F.col("s.sub").alias("sub"), F.col("s.v").alias("v")
-    )
+    """``ivfpq_residuals`` of vectors against their nearest coarse cell."""
+    assigned = ivf_assign(vecs, coarse_centroids, id_col, vec_col)
+    return ivfpq_residuals(assigned, coarse_centroids, id_col, vec_col)
 
 
 def ivfpq_topk(
@@ -151,70 +139,21 @@ def ivfpq_topk(
     caller-supplied values are compared (``compare_keys`` — the check
     itself is operators/stamps.check_stamp, shared with the append
     side and the MinHash family; r13 ADVICE)."""
-    from pyetl_spark.operators.stamps import check_stamp
-
-    check_stamp(
-        codes,
-        field="code",
-        stamp_keys=IVFPQ_STAMP_KEYS,
-        label="(m, dim)",
-        expected=(m, dim),
-        caller="ivfpq_topk",
-        consequence=(
-            "a mismatched search splits probe residuals on the wrong "
-            "subvector boundaries and returns wrong neighbors without "
-            "an error"
-        ),
-        compare_keys=IVFPQ_STAMP_KEYS[:2],
-    )
-    cents = F.broadcast(coarse_centroids)
-    pc = probes.crossJoin(cents).withColumn(
-        "_d", _sq_dist(F.col(probe_vec), F.col("centroid"))
-    )
-    w = Window.partitionBy(probe_id).orderBy(F.col("_d"), F.col("cell"))
-    probe_cells = (
-        pc.withColumn("_rn", F.row_number().over(w))
-        .filter(F.col("_rn") <= nprobe)
-        .select(
-            F.col(probe_id).alias("pid"),
-            "cell",
-            F.zip_with(
-                F.col(probe_vec), F.col("centroid"), lambda x, y: x - y
-            ).alias("pr"),
-        )
-    )
-    p_sub = _split_keyed(probe_cells, ["pid", "cell"], "pr", m, dim)
-    cb = codebook.select(
-        "sub", F.col("cell").alias("code"), "centroid"
-    )
-    table = p_sub.join(F.broadcast(cb), "sub").select(
-        "pid",
+    _check_codes_stamp(codes, (m, dim), "ivfpq_topk")
+    probe_cells = _probe_cells(
+        probes, coarse_centroids, nprobe, probe_id, probe_vec
+    ).select(
+        F.col(probe_id).alias("pid"),
         "cell",
-        "sub",
-        "code",
-        _sq_dist(F.col("v"), F.col("centroid")).alias("pd"),
+        F.zip_with(
+            F.col(probe_vec), F.col("centroid"), lambda x, y: x - y
+        ).alias("pr"),
     )
-    joined = codes.join(table, ["cell", "sub", "code"])
-    if exclude_self:
-        joined = joined.filter(F.col("id") != F.col("pid"))
-    scored = (
-        joined.groupBy("pid", "id")
-        .agg(
-            F.aggregate(
-                F.transform(
-                    F.array_sort(F.collect_list(F.struct("sub", "pd"))),
-                    lambda st: st.getField("pd"),
-                ),
-                F.lit(0.0),
-                lambda acc, x: acc + x,
-            ).alias("adc_dist")
-        )
-    )
-    w2 = Window.partitionBy("pid").orderBy("adc_dist", "id")
-    return (
-        scored.withColumn("rank", F.row_number().over(w2))
-        .filter(F.col("rank") <= topk)
-        .select(F.col("pid").alias(probe_id), "id", "adc_dist", "rank")
+    p_sub = _split(probe_cells, ["pid", "cell"], "pr", m, dim)
+    table = _adc_table(p_sub, codebook, ["pid", "cell"])
+    return _adc_rank(
+        codes.join(table, ["cell", "sub", "code"]), probe_id, topk,
+        exclude_self,
     )
 
 
@@ -227,53 +166,46 @@ def ivfpq_encode(
     k: int = 16,
 ) -> DataFrame:
     """(id, cell, sub, code): the inverted-file rows ``ivfpq_topk``
-    searches — PQ codes of the residual frame joined back to the coarse
-    cell. ``residuals`` is ``ivfpq_residuals`` output (id, cell, r).
+    searches — PQ codes of the residual frame, the coarse cell carried
+    through one narrow projection (no join, no shuffle). ``residuals``
+    is ``ivfpq_residuals`` output (id, cell, r).
 
     The build parameters are stamped into the ``code`` field metadata
     so the append path (``ivfpq_index_delta``) can fail fast when a
     maintenance job's (m, dim, k) disagree with the index it extends —
     a mismatch would otherwise join day-2 codes against the wrong
     codewords and silently return garbage distances, never an error."""
-    from pyetl_spark.operators.pq import pq_encode
-
-    codes = pq_encode(
-        residuals, codebook, id_col=id_col, vec_col="r", m=m, dim=dim
-    )
-    return codes.join(
-        residuals.select(F.col(id_col).alias("id"), "cell"), "id"
-    ).select(
-        "id",
-        "cell",
-        "sub",
-        F.col("code").alias(
-            "code",
-            metadata={"ivfpq.m": m, "ivfpq.dim": dim, "ivfpq.k": k},
-        ),
-    )
+    return _encode(
+        residuals.select(F.col(id_col).alias("id"), "cell", "r"),
+        codebook, "r", m, dim, ["id", "cell"],
+    ).withMetadata("code", {"ivfpq.m": m, "ivfpq.dim": dim, "ivfpq.k": k})
 
 
 def _check_codes_stamp(
-    codes: DataFrame, m: int, dim: int, k: int, caller: str
+    codes: DataFrame, expected: tuple, caller: str
 ) -> None:
     """Raise if ``codes`` carries an (m, dim, k) stamp in its ``code``
-    field metadata that disagrees with the caller's parameters.
-    All-keys-or-nothing contract and the check itself live in
-    operators/stamps.check_stamp (shared with the MinHash band_hash
-    stamp, r13)."""
+    field metadata that disagrees with ``expected``: (m, dim, k) when
+    appending, (m, dim) when searching — k is not a search parameter (it
+    lives in the codebook). All-keys-or-nothing contract and the check
+    itself live in operators/stamps.check_stamp (shared with the MinHash
+    band_hash stamp, r13)."""
     from pyetl_spark.operators.stamps import check_stamp
 
+    keys = IVFPQ_STAMP_KEYS[: len(expected)]
     check_stamp(
         codes,
         field="code",
         stamp_keys=IVFPQ_STAMP_KEYS,
-        label="(m, dim, k)",
-        expected=(m, dim, k),
+        label="(" + ", ".join(k.split(".")[1] for k in keys) + ")",
+        expected=expected,
         caller=caller,
         consequence=(
-            "appending codes encoded under a different codebook layout "
-            "silently corrupts every future search over the mixed index"
+            "codes and probes split under different (m, dim, k) join the "
+            "wrong codewords — wrong neighbors, and an append corrupts "
+            "every later search of the mixed index, without an error"
         ),
+        compare_keys=keys,
     )
 
 
@@ -313,16 +245,9 @@ def ivfpq_index_delta(
     quality silently — recall falls, no error fires. Monitor
     ``ivfpq_batch_mse`` of each batch against the build-time value and
     retrain when the ratio drifts (the nightly-rebuild trigger)."""
-    from pyetl_spark.operators.ivf import ivf_assign
-
     if codes is not None:
-        _check_codes_stamp(codes, m, dim, k, "ivfpq_index_delta")
-    assigned = ivf_assign(
-        new_vecs, coarse_centroids, id_col=id_col, vec_col=vec_col
-    )
-    res = ivfpq_residuals(
-        assigned, coarse_centroids, id_col=id_col, vec_col=vec_col
-    )
+        _check_codes_stamp(codes, (m, dim, k), "ivfpq_index_delta")
+    res = _residuals_of(new_vecs, coarse_centroids, id_col, vec_col)
     return ivfpq_encode(res, codebook, id_col=id_col, m=m, dim=dim, k=k)
 
 
@@ -343,15 +268,7 @@ def ivfpq_batch_mse(
     and the index should be rebuilt rather than appended to. Runs one
     scalar aggregate (an action) — call it from maintenance jobs, not
     inside transformations."""
-    from pyetl_spark.operators.ivf import ivf_assign
-    from pyetl_spark.operators.pq import reconstruction_mse
-
-    res = ivfpq_residuals(
-        ivf_assign(vecs, coarse_centroids, id_col=id_col, vec_col=vec_col),
-        coarse_centroids,
-        id_col=id_col,
-        vec_col=vec_col,
-    )
+    res = _residuals_of(vecs, coarse_centroids, id_col, vec_col)
     return reconstruction_mse(
         res, codebook, id_col=id_col, vec_col="r", m=m, dim=dim
     )

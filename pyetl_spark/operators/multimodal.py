@@ -90,30 +90,54 @@ def _decode_image_stub(payload: bytes, allow_fake: bool) -> np.ndarray:
     )
 
 
+#: PIL.Image once ``_pil_image`` has looked it up, False when no imaging
+#: lib is importable, None before the first decode
+_PIL_IMAGE = None
+
+
+def _pil_image():
+    """PIL.Image, or False when it is not importable — looked up once,
+    not per payload: Python caches a successful import in sys.modules
+    but not a FAILED one, so an absent PIL made every decode search
+    sys.path again (500 failed imports: ~30 ms). The cache lives in
+    this module's globals, i.e. once per process on the driver; on
+    executors, where the module ships by value inside the task closure,
+    once per task."""
+    global _PIL_IMAGE
+    if _PIL_IMAGE is None:
+        try:
+            from PIL import Image  # optional imaging dep, absent here
+
+            _PIL_IMAGE = Image
+        except ImportError:
+            _PIL_IMAGE = False
+    return _PIL_IMAGE
+
+
 def _decode_image(payload: bytes, allow_fake: bool) -> np.ndarray:
     """Decode dispatcher: REAL decoder when an imaging lib is importable,
     deterministic stub otherwise.
 
     The PIL branch is the production integration point — grayscale
     float64 in [0,1] so both branches emit the same dtype/range and
-    downstream feature/resize code is branch-agnostic. The import is
-    per-call-cheap (module cache) and lives INSIDE the executor-side
-    function so the operator ships to workers that may or may not have
-    the lib — each worker independently picks the best available path.
+    downstream feature/resize code is branch-agnostic. The lookup
+    (``_pil_image``) runs INSIDE the executor-side function so the
+    operator ships to workers that may or may not have the lib — each
+    worker independently picks the best available path.
     """
-    try:
-        import io as _io
+    image = _pil_image()
+    if image:
+        try:
+            import io as _io
 
-        from PIL import Image  # optional imaging dep, absent here
-
-        img = Image.open(_io.BytesIO(payload)).convert("L")
-        return np.asarray(img, dtype=np.float64) / 255.0
-    except ImportError:
-        return _decode_image_stub(payload, allow_fake)
-    except Exception:
-        # PIL present but payload isn't a real image (e.g. fixture text
-        # bytes) — same deterministic fallback keeps pipelines runnable
-        return _decode_image_stub(payload, allow_fake)
+            img = image.open(_io.BytesIO(payload)).convert("L")
+            return np.asarray(img, dtype=np.float64) / 255.0
+        except Exception:
+            # PIL present but payload isn't a real image (e.g. fixture
+            # text bytes) — same deterministic fallback keeps pipelines
+            # runnable
+            pass
+    return _decode_image_stub(payload, allow_fake)
 
 
 def attach_fake_media(docs: DataFrame) -> DataFrame:

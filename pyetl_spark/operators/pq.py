@@ -11,12 +11,19 @@ candidate's distance is the sum of m table entries selected by its
 codes.
 
 Scale-first design decisions:
-- ONE Lloyd loop trains ALL m codebooks simultaneously over the
-  exploded (id, sub, subvec) frame — compound key (sub, cell)
-  everywhere. Calling a per-subspace kmeans m times would serialize m
-  driver loops and m× the job count for zero extra information.
-- Seeding is the hash-spread scheme of ivf.seed_centroids (replayable,
-  rand()-free), applied per subspace.
+- ``pq_fit_exact`` trains ALL m codebooks in one Lloyd loop on ivf's
+  k-means kernel (``ivf._lloyd_step``, of which k-means is the
+  one-subspace case): each iteration is one Arrow stage that assigns
+  every vector's m subvectors and sums their fixed-point coordinates per
+  (subspace, cell). Only m×k×(D/m) partials leave a partition, so
+  training shuffles no corpus rows at any scale.
+- Seeding is phash60-spread per subspace (replayable, rand()-free, the
+  same md5 hash on DuckDB): one SQL aggregate whose ≤ m·k rows the
+  driver relabels.
+- Encoding is a narrow projection through ivf's nearest-centroid code
+  (``ivf._nearest_structs``: a JVM expression per subspace below
+  ``ivf._KERNEL_MIN_K`` codewords, the Arrow kernel above) — no join,
+  no shuffle.
 - Codes stay in LONG format (id, sub, code) — the layout every
   downstream join wants; array assembly is a display concern.
 - ADC is joins + one aggregation: probe×codebook table (m·k rows per
@@ -29,22 +36,22 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
-from pyetl_spark.operators.ivf import localize_bounded
+from pyetl_spark.operators.ivf import (
+    _centroid_matrix,
+    _lloyd_step,
+    _nearest_structs,
+    _seed_books,
+    _sq_dist,
+    localize_rows,
+)
 
 
-def _sq_dist(a, b):
-    return F.aggregate(
-        F.zip_with(a, b, lambda x, y: (x - y) * (x - y)),
-        F.lit(0.0),
-        lambda acc, x: acc + x,
-    )
-
-
-def split_subvectors(
-    df: DataFrame, id_col: str, vec_col: str, m: int, dim: int
-) -> DataFrame:
-    """(id, sub, v): subvector j = slice [j·(dim/m)+1, dim/m] (1-based)."""
+def _split(df: DataFrame, keys: list, vec_col: str, m: int, dim: int):
+    """(keys..., sub, v): subvector j = slice [j·(dim/m)+1, dim/m]
+    (1-based) of ``vec_col`` as doubles."""
     d_sub = dim // m
+    # a non-divisible (m, dim) would silently drop the trailing dim % m
+    # components from every subvector — fail fast instead
     assert d_sub * m == dim, "m must divide dim"
     subs = F.explode(
         F.array(
@@ -61,69 +68,52 @@ def split_subvectors(
             ]
         )
     )
-    return df.select(F.col(id_col).alias("id"), subs.alias("s")).select(
-        "id", F.col("s.sub").alias("sub"), F.col("s.v").alias("v")
+    return df.select(*keys, subs.alias("s")).select(
+        *keys, F.col("s.sub").alias("sub"), F.col("s.v").alias("v")
     )
 
 
-def _assign(sub_df: DataFrame, codebook: DataFrame) -> DataFrame:
-    """(id, sub, v, code, dist): nearest codeword per subvector."""
-    paired = sub_df.join(F.broadcast(codebook), "sub")
-    d = _sq_dist(F.col("v"), F.col("centroid"))
-    best = F.min(F.struct(d.alias("d"), F.col("cell").alias("c")))
-    return (
-        paired.groupBy("id", "sub")
-        .agg(F.first("v").alias("v"), best.alias("b"))
-        .select(
-            "id",
-            "sub",
-            "v",
-            F.col("b.c").alias("code"),
-            F.col("b.d").alias("dist"),
-        )
-    )
-
-
-def pq_fit(
-    corpus: DataFrame,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    m: int = 8,
-    k: int = 16,
-    dim: int = 64,
-    iters: int = 3,
+def split_subvectors(
+    df: DataFrame, id_col: str, vec_col: str, m: int, dim: int
 ) -> DataFrame:
-    """Train all m codebooks in one distributed loop →
-    DataFrame(sub, cell, centroid array<double>)."""
-    sub_df = split_subvectors(corpus, id_col, vec_col, m, dim)
-    h = F.xxhash64("id", "sub")
-    best_seed = F.min(F.struct(h.alias("h"), F.col("v").alias("v")))
-    per_bucket = (
-        sub_df.groupBy("sub", F.pmod(h, F.lit(k)).alias("bucket"))
-        .agg(best_seed.alias("b"))
-        .select("sub", "bucket", F.col("b.v").alias("centroid"))
+    """(id, sub, v): subvector j = slice [j·(dim/m)+1, dim/m] (1-based)."""
+    return _split(
+        df.select(F.col(id_col).alias("id"), vec_col), ["id"], vec_col, m, dim
     )
-    w = Window.partitionBy("sub").orderBy("bucket")
-    codebook = per_bucket.select(
-        "sub",
-        (F.row_number().over(w) - 1).alias("cell"),
-        "centroid",
+
+
+def _nearest_codes(
+    df: DataFrame, codebook: DataFrame, vec_col: str, m: int, dim: int,
+    keep: list,
+) -> DataFrame:
+    """``keep`` columns plus ``_b0`` … ``_b{m-1}``: the (cell, dist)
+    struct of each subspace's nearest codeword — one narrow projection
+    over the collected codebook (m·k rows of dim/m doubles)."""
+    rows = sorted(
+        codebook.select("sub", "cell", "centroid").collect(),
+        key=lambda r: (r["sub"], r["cell"]),
     )
-    for _ in range(iters):
-        assigned = _assign(sub_df, codebook)
-        means = assigned.select(
-            "sub", F.col("code").alias("cell"), F.posexplode("v").alias("pos", "x")
-        ).groupBy("sub", "cell", "pos").agg(
-            (F.sum("x") / F.count(F.lit(1))).alias("mval")
-        )
-        codebook = means.groupBy("sub", "cell").agg(
-            F.transform(
-                F.array_sort(F.collect_list(F.struct("pos", "mval"))),
-                lambda s: s.getField("mval"),
-            ).alias("centroid")
-        )
-        codebook = codebook.localCheckpoint(eager=True)
-    return codebook
+    books = [
+        _centroid_matrix([r for r in rows if r["sub"] == j]) for j in range(m)
+    ]
+    assert books[0][1].shape[1] * m == dim, "codebook does not match (m, dim)"
+    best = _nearest_structs(books, "_v")
+    return df.select(
+        *keep, F.col(vec_col).cast("array<double>").alias("_v")
+    ).select(*keep, *[b.alias(f"_b{j}") for j, b in enumerate(best)])
+
+
+def _encode(
+    df: DataFrame, codebook: DataFrame, vec_col: str, m: int, dim: int,
+    keep: list,
+) -> DataFrame:
+    """(keep..., sub, code): ``_nearest_codes`` exploded to long format."""
+    best = F.array(*[F.col(f"_b{j}") for j in range(m)])
+    return (
+        _nearest_codes(df, codebook, vec_col, m, dim, keep)
+        .select(*keep, F.posexplode(best).alias("sub", "_b"))
+        .select(*keep, "sub", F.col("_b.cell").alias("code"))
+    )
 
 
 def pq_encode(
@@ -134,9 +124,12 @@ def pq_encode(
     m: int = 8,
     dim: int = 64,
 ) -> DataFrame:
-    """(id, sub, code) — m·(log2 k)-bit compressed corpus, long format."""
-    sub_df = split_subvectors(corpus, id_col, vec_col, m, dim)
-    return _assign(sub_df, codebook).select("id", "sub", "code")
+    """(id, sub, code) — m·(log2 k)-bit compressed corpus, long format;
+    a narrow projection, no shuffle."""
+    return _encode(
+        corpus.select(F.col(id_col).alias("id"), vec_col),
+        codebook, vec_col, m, dim, ["id"],
+    )
 
 
 def reconstruction_mse(
@@ -148,11 +141,14 @@ def reconstruction_mse(
     dim: int = 64,
 ) -> float:
     """Mean over vectors of the summed squared subspace quantization
-    error — the quantity PQ training minimizes."""
-    sub_df = split_subvectors(corpus, id_col, vec_col, m, dim)
-    assigned = _assign(sub_df, codebook)
-    per_vec = assigned.groupBy("id").agg(F.sum("dist").alias("e"))
-    return per_vec.agg(F.avg("e").alias("mse")).collect()[0]["mse"]
+    error — the quantity PQ training minimizes. Each vector's error sums
+    its m subspace distances in sub order; ``id_col`` is not read."""
+    err = sum((F.col(f"_b{j}.dist") for j in range(1, m)), F.col("_b0.dist"))
+    return (
+        _nearest_codes(corpus, codebook, vec_col, m, dim, [])
+        .agg(F.avg(err))
+        .collect()[0][0]
+    )
 
 
 def adc_topk(
@@ -177,22 +173,34 @@ def adc_topk(
     (external probes: an id collision must not drop a real neighbor) —
     the single convention shared with ivfpq.ivfpq_topk (r12 ADVICE)."""
     p_sub = split_subvectors(probes, probe_id, probe_vec, m, dim)
-    table = (
-        p_sub.withColumnRenamed("id", "pid")
-        .join(F.broadcast(codebook), "sub")
-        .select(
-            "pid",
-            "sub",
-            F.col("cell").alias("code"),
-            _sq_dist(F.col("v"), F.col("centroid")).alias("pd"),
-        )
+    table = _adc_table(p_sub.withColumnRenamed("id", "pid"), codebook, ["pid"])
+    return _adc_rank(
+        codes.join(F.broadcast(table), ["sub", "code"]), probe_id, topk,
+        exclude_self,
     )
-    # ADC distance = SUM of the m per-subspace table entries — folded in
-    # FIXED sub order (collect → sort by sub → ascending fold) instead of
-    # F.sum, whose float accumulation order varies with partitioning.
-    # Makes the distance bit-deterministic (and SQL-replayable) for the
-    # cost of sorting m=8 structs per candidate (r7 oracle tier).
-    joined = codes.join(F.broadcast(table), ["sub", "code"])
+
+
+def _adc_table(p_sub: DataFrame, codebook: DataFrame, keys: list):
+    """(keys..., sub, code, pd): each probe subvector's squared distance
+    to every codeword of its subspace — m·k rows per probe key, joined
+    against a broadcast codebook."""
+    cb = codebook.select("sub", F.col("cell").alias("code"), "centroid")
+    pd = _sq_dist(F.col("v"), F.col("centroid")).alias("pd")
+    return p_sub.join(F.broadcast(cb), "sub").select(*keys, "sub", "code", pd)
+
+
+def _adc_rank(
+    joined: DataFrame, probe_id: str, topk: int, exclude_self: bool
+) -> DataFrame:
+    """(probe_id, id, adc_dist, rank) from code rows joined to their ADC
+    table entries (pid, id, sub, pd) — shared by adc_topk and
+    ivfpq.ivfpq_topk.
+
+    ADC distance = SUM of the m per-subspace table entries — folded in
+    FIXED sub order (collect → sort by sub → ascending fold) instead of
+    F.sum, whose float accumulation order varies with partitioning.
+    Makes the distance bit-deterministic (and SQL-replayable) for the
+    cost of sorting m=8 structs per candidate (r7 oracle tier)."""
     if exclude_self:
         joined = joined.filter(F.col("id") != F.col("pid"))
     scored = (
@@ -234,61 +242,39 @@ def pq_fit_exact(
     iters: int = 2,
     scale: int = PQ_SCALE,
 ) -> DataFrame:
-    """Oracle-replayable ``pq_fit`` (r7, same recipe as
-    ivf.kmeans_fit_exact): phash60-seeded buckets per subspace
-    (md5-based, cross-engine; (hash, id)-min tiebreak), Lloyd means from
-    exact integer sums of fixed-point-quantized coordinates, and the
-    argmin assignment's min-struct (already order-free). Codebooks are
-    quantized to ``scale`` between iterations — immaterial at 1e-4 of
-    the data range, decisive for hash verifiability."""
+    """Train all m codebooks → DataFrame(sub int, cell int, centroid
+    array<double>), oracle-replayable (same recipe as
+    ivf.kmeans_fit_exact, on the same kernel):
+
+    - seeds are phash60(sub, id)-spread per subspace (md5-based,
+      cross-engine; (hash, id)-min tie-break), relabeled densely in
+      bucket order on the driver;
+    - each Lloyd iteration is one ``ivf._lloyd_step`` job: nearest
+      codeword per subvector (ascending-dimension distance fold, lowest
+      cell on ties — the min-(dist, cell) a SQL oracle replays), means
+      from exact integer sums of fixed-point-quantized coordinates;
+    - codebooks are quantized to ``scale`` between iterations —
+      immaterial at 1e-4 of the data range, decisive for hash
+      verifiability;
+    - empty buckets and empty cells drop, so subspaces may end with
+      different codeword counts and gaps in their cell ids; an empty
+      corpus raises."""
+    from pyspark.sql.types import StructType
+
     from pyetl_spark.parity import phash60_seeded
 
     sub_df = split_subvectors(corpus, id_col, vec_col, m, dim)
-    h = phash60_seeded(F.col("sub"), F.col("id"))
-    best_seed = F.min(
-        F.struct(h.alias("h"), F.col("id").alias("i"), F.col("v").alias("v"))
+    books = _seed_books(
+        sub_df, phash60_seeded(F.col("sub"), F.col("id")), k, m, "id", "v"
     )
-    per_bucket = (
-        sub_df.groupBy("sub", F.pmod(h, F.lit(k)).alias("bucket"))
-        .agg(best_seed.alias("b"))
-        .select("sub", "bucket", F.col("b.v").alias("centroid"))
-    )
-    w = Window.partitionBy("sub").orderBy("bucket")
-    codebook = per_bucket.select(
-        "sub",
-        (F.row_number().over(w) - 1).alias("cell"),
-        "centroid",
-    )
-    # r15 mean update (same move as ivf.kmeans_fit_exact): all d_sub
-    # means as flat per-dimension aggregates in ONE groupBy(sub, cell) —
-    # the posexplode form shuffled corpus×m×d_sub (sub, cell, pos)
-    # partial rows and then re-shuffled the means through a collect_list/
-    # array_sort reassembly. One compiled SQL string for the d_sub
-    # aggregates; integer fxp sums are order-free and subvectors all
-    # carry d_sub positions, so codebooks are bit-identical (pinned by
-    # the vec_ann_ivfpq* oracle hashes at 3 SFs).
-    d_sub = dim // m
-    terms = ", ".join(
-        f"(cast(sum(cast(signum(v[{j}]) * "
-        f"floor(abs(v[{j}]) * {float(scale)}D + 0.5D) as bigint))"
-        f" as double) / cast(count(1) as double)) / {float(scale)}D"
-        for j in range(d_sub)
-    )
+    vecs = corpus.select(F.col(vec_col).cast("array<double>").alias("v"))
     for _ in range(iters):
-        assigned = _assign(sub_df, codebook)
-        codebook = (
-            assigned.select("sub", F.col("code").alias("cell"), "v")
-            .groupBy("sub", "cell")
-            .agg(F.expr(f"array({terms})").alias("centroid"))
-        )
-        # r16: LOCALIZE instead of localCheckpoint (m·k rows of d_sub
-        # doubles — bounded index state). The collect executes the
-        # iteration's aggregate exactly once, same as the old eager
-        # checkpoint, but the VALUES LocalRelation it returns makes the
-        # next iteration's `_assign` broadcast (and the final
-        # encode/topk broadcasts) job-free instead of re-scanning a
-        # checkpointed RDD per consumer. Values bit-identical (IEEE
-        # doubles round-trip the driver exactly); lineage is truncated
-        # either way.
-        codebook = localize_bounded(codebook)
-    return codebook
+        books = _lloyd_step(vecs, books, "v", scale)
+    # LOCALIZE (m·k rows of dim/m doubles — bounded index state): every
+    # downstream collect and broadcast of the codebook is then job-free
+    return localize_rows(
+        corpus.sparkSession,
+        [(j, r["cell"], r["centroid"])
+         for j, book in enumerate(books) for r in book],
+        StructType.fromDDL("sub int, cell int, centroid array<double>"),
+    )

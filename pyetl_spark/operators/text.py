@@ -62,6 +62,9 @@ def lang_id(toks: Column) -> Column:
     return expr
 
 
+_ALNUM_SPACE = "abcdefghijklmnopqrstuvwxyz0123456789 "
+
+
 def quality_score(text: Column, toks: Column) -> Column:
     """Composite quality heuristic in [0, 1]: length saturation, stopword
     density, non-alnum penalty — ratios of exact integers, so both engines
@@ -75,8 +78,11 @@ def quality_score(text: Column, toks: Column) -> Column:
     stop_ratio = F.least(
         all_hits.cast("double") * F.lit(4.0) / n_toks, F.lit(1.0)
     )
-    stripped = F.regexp_replace(text, "[^a-z0-9 ]", "")
-    punct_ratio = (n_chars - F.length(stripped).cast("double")) / n_chars
+    # characters outside [a-z0-9 ]: translate deletes every allowed one,
+    # the same integer a regexp strip of the rest gives without running a
+    # regex engine per row
+    n_other = F.length(F.translate(text, _ALNUM_SPACE, ""))
+    punct_ratio = n_other.cast("double") / n_chars
     return (
         F.lit(0.5) * length_score
         + F.lit(0.3) * stop_ratio
@@ -409,8 +415,8 @@ def quality_score_sql(text: str, toks: str) -> str:
     n_toks = f"CAST(len({toks}) AS DOUBLE)"
     hits = " + ".join(_stopword_hits_sql(toks, g) for g in STOPWORDS)
     stop_ratio = f"least(CAST({hits} AS DOUBLE) * 4.0 / {n_toks}, 1.0)"
-    stripped = f"regexp_replace({text}, '[^a-z0-9 ]', '', 'g')"
-    punct_ratio = f"({n_chars} - CAST(length({stripped}) AS DOUBLE)) / {n_chars}"
+    n_other = f"length(translate({text}, '{_ALNUM_SPACE}', ''))"
+    punct_ratio = f"CAST({n_other} AS DOUBLE) / {n_chars}"
     return (
         f"0.5 * {length_score} + 0.3 * {stop_ratio}"
         f" + 0.2 * (1.0 - {punct_ratio})"

@@ -634,12 +634,12 @@ def vec_ann_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     tests/test_ivf.py; cell balance is observable via cell_size_stats.
 
     Tier A (r7 conversion): the clustering is ``kmeans_fit_exact``
-    (operators/ivf.py) — phash60-spread seeds + integer-quantized Lloyd
-    means + ascending-fold distances — so the ENTIRE index-build +
+    (operators/ivf.py), the engine's only k-means fit — phash60-spread
+    seeds + integer-quantized Lloyd means (one Arrow stage per
+    iteration) + ascending-fold distances — so the ENTIRE index-build +
     search pipeline is replayed by the DuckDB oracle (``_ivf_oracle``:
     unrolled Lloyd CTEs, same argmin tie-break, same fold-ordered
-    cosine) and hash-matches on raw doubles. xxhash64-seeded
-    ``kmeans_fit`` remains the non-oracle default elsewhere."""
+    cosine) and hash-matches on raw doubles."""
     from pyetl_spark.operators.ivf import (
         ivf_assign,
         ivf_topk,

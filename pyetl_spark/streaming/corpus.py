@@ -66,12 +66,13 @@ def score_and_gate(
     docs: DataFrame, min_quality: float = 0.5, langs: tuple = ("en", "de", "fr")
 ) -> DataFrame:
     """Adds quality + accept/reject verdict; pure narrow JVM expressions
-    (identical scorer to the batch flagship), safe on any stream."""
+    (identical scorer to the batch flagship), safe on any stream. The
+    verdict reads the ``quality`` column of a first projection, so the
+    score is computed once per row, not once more inside the verdict."""
     toks = F.split("text", " ")
-    q = TX.quality_score(F.col("text"), toks)
     reason = (
         F.when(~F.col("lang").isin(*langs), F.lit("lang_not_allowed"))
-        .when(q < min_quality, F.lit("low_quality"))
+        .when(F.col("quality") < min_quality, F.lit("low_quality"))
         .otherwise(F.lit(None))
     )
     return docs.select(
@@ -81,9 +82,8 @@ def score_and_gate(
         "lang",
         "source",
         F.md5("text").alias("content_hash"),
-        q.alias("quality"),
-        reason.alias("reject_reason"),
-    )
+        TX.quality_score(F.col("text"), toks).alias("quality"),
+    ).withColumn("reject_reason", reason)
 
 
 def dedup_stream(
@@ -459,7 +459,7 @@ def encode_vectors_batch(
     from pyetl_spark.operators.pq import reconstruction_mse
 
     if codes is not None:
-        _check_codes_stamp(codes, m, dim, k, "encode_vectors_batch")
+        _check_codes_stamp(codes, (m, dim, k), "encode_vectors_batch")
     batch = batch_df.select("vec_id", F.col("embedding").alias("e"))
     res = ivfpq_residuals(
         ivf_assign(batch, coarse_centroids), coarse_centroids

@@ -967,7 +967,7 @@ def test_semdedup_drops_are_true_dups_and_cluster_complete(spark):
     — cross-cluster misses are the documented approximation)."""
     import numpy as np
 
-    from pyetl_spark.operators.semdedup import semdedup_assign
+    from pyetl_spark.operators.semdedup import semdedup_assign_exact
 
     e = load_tables(spark, SF_ORACLE).embeddings
     v = e.select(
@@ -975,7 +975,7 @@ def test_semdedup_drops_are_true_dups_and_cluster_complete(spark):
         F.transform("embedding", lambda x: x.cast("double")).alias("e"),
     )
     tau = 0.95
-    out = semdedup_assign(v, k=8, tau=tau, iters=2).collect()
+    out = semdedup_assign_exact(v, k=8, tau=tau, iters=2).collect()
     vecs = {
         r["vec_id"]: np.asarray(r["e"], dtype=np.float64)
         for r in v.collect()
@@ -1007,14 +1007,14 @@ def test_semdedup_cell_cap_guard(spark):
     re-quadratization guard), not OOM a task."""
     import pyspark
 
-    from pyetl_spark.operators.semdedup import semdedup_assign
+    from pyetl_spark.operators.semdedup import semdedup_assign_exact
 
     v = spark.range(64).select(
         F.col("id").alias("vec_id"),
         F.array(F.lit(1.0), F.lit(0.0)).alias("e"),  # all identical → 1 cell
     )
     with pytest.raises(pyspark.errors.PythonException, match="exceeds cap"):
-        semdedup_assign(v, k=2, tau=0.99, iters=1, cap=10).collect()
+        semdedup_assign_exact(v, k=2, tau=0.99, iters=1, cap=10).collect()
 
 
 # --- MMR ----------------------------------------------------------------------

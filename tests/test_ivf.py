@@ -8,10 +8,10 @@ import pytest
 from pyspark.sql import functions as F
 
 from pyetl_spark.operators.ivf import (
+    KMEANS_SCALE,
     ivf_assign,
     ivf_topk,
-    kmeans_fit,
-    kmeans_inertia,
+    kmeans_fit_exact,
 )
 from pyetl_spark.operators.knn import cosine_topk_bruteforce
 from pyetl_spark.tables import load_tables
@@ -27,22 +27,31 @@ def corpus(spark):
     ).cache()
 
 
+def _inertia(corpus, cents) -> float:
+    """Sum over vectors of the squared distance to the nearest centroid."""
+    import pyetl_spark.operators.ivf as ivf
+
+    return (
+        ivf._nearest_cell(corpus.select("e"), cents, "e")
+        .agg(F.sum("dist"))
+        .collect()[0][0]
+    )
+
+
 def test_kmeans_deterministic_and_converging(spark, corpus):
-    c1 = kmeans_fit(corpus, k=4, iters=2)
-    c2 = kmeans_fit(corpus, k=4, iters=2)
+    c1 = kmeans_fit_exact(corpus, k=4, iters=2)
+    c2 = kmeans_fit_exact(corpus, k=4, iters=2)
     # determinism: identical centroids across runs
     r1 = {r["cell"]: r["centroid"] for r in c1.collect()}
     r2 = {r["cell"]: r["centroid"] for r in c2.collect()}
     assert r1 == r2
-    # Lloyd iterations cannot increase inertia
-    seeds = kmeans_fit(corpus, k=4, iters=0)
-    i0 = kmeans_inertia(corpus, seeds)
-    i2 = kmeans_inertia(corpus, c1)
-    assert i2 <= i0 + 1e-9
+    # Lloyd iterations do not increase inertia over the seeds
+    seeds = kmeans_fit_exact(corpus, k=4, iters=0)
+    assert _inertia(corpus, c1) <= _inertia(corpus, seeds) + 1e-9
 
 
 def test_ivf_assign_partitions_corpus(spark, corpus):
-    cents = kmeans_fit(corpus, k=4, iters=2)
+    cents = kmeans_fit_exact(corpus, k=4, iters=2)
     indexed = ivf_assign(corpus, cents)
     assert indexed.count() == corpus.count()
     cells = indexed.select("cell").distinct().count()
@@ -50,7 +59,7 @@ def test_ivf_assign_partitions_corpus(spark, corpus):
 
 
 def test_ivf_topk_recall_and_exact_rerank(spark, corpus):
-    cents = kmeans_fit(corpus, k=4, iters=2)
+    cents = kmeans_fit_exact(corpus, k=4, iters=2)
     indexed = ivf_assign(corpus, cents).select(
         F.col("vec_id").alias("cand_id"), F.col("e").alias("cand_vec"), "cell"
     )
@@ -80,19 +89,19 @@ def test_ivf_topk_recall_and_exact_rerank(spark, corpus):
 
 
 def test_hash_spread_seeding_balances_cells(spark, corpus):
-    """Hash-spread seeds: deterministic across runs, exactly k distinct
-    seed cells, and the resulting inverted file is reasonably balanced
-    (skew factor max/avg bounded) on the Gaussian fixture."""
-    from pyetl_spark.operators.ivf import cell_size_stats, seed_centroids
+    """phash60-spread seeds: deterministic across runs, exactly k
+    distinct seed cells, and the resulting inverted file is reasonably
+    balanced (skew factor max/avg bounded) on the Gaussian fixture."""
+    from pyetl_spark.operators.ivf import cell_size_stats
 
-    s1 = seed_centroids(corpus, k=6).collect()
-    s2 = seed_centroids(corpus, k=6).collect()
+    s1 = kmeans_fit_exact(corpus, k=6, iters=0).collect()
+    s2 = kmeans_fit_exact(corpus, k=6, iters=0).collect()
     assert sorted(r["cell"] for r in s1) == list(range(6))
-    assert {tuple(r["centroid"]) for r in s1} == {
-        tuple(r["centroid"]) for r in s2
-    }
+    seeds = {tuple(r["centroid"]) for r in s1}
+    assert len(seeds) == 6  # pairwise distinct
+    assert seeds == {tuple(r["centroid"]) for r in s2}
 
-    cents = kmeans_fit(corpus, k=6, iters=2)
+    cents = kmeans_fit_exact(corpus, k=6, iters=2)
     stats = cell_size_stats(ivf_assign(corpus, cents)).collect()[0]
     assert stats["n_cells"] == 6
     assert stats["min_cell"] >= 1
@@ -101,57 +110,22 @@ def test_hash_spread_seeding_balances_cells(spark, corpus):
 
 
 def test_spread_seeding_not_worse_than_lowest_id(spark, corpus):
-    """After the same Lloyd iterations, hash-spread seeding must reach
-    inertia no worse than ~10% above the lowest-id baseline (on this
-    fixture it's typically better — adjacent-id seeds start collapsed)."""
-    from pyetl_spark.operators.ivf import kmeans_inertia
+    """After the same Lloyd iterations, phash60-spread seeding must reach
+    inertia no worse than ~10% above seeding with the k lowest-id
+    vectors (adjacent-id seeds start collapsed)."""
+    import pyetl_spark.operators.ivf as ivf
 
-    spread = kmeans_fit(corpus, k=6, iters=2, spread_seeds=True)
-    naive = kmeans_fit(corpus, k=6, iters=2, spread_seeds=False)
-    i_spread = kmeans_inertia(corpus, spread)
-    i_naive = kmeans_inertia(corpus, naive)
+    spread = kmeans_fit_exact(corpus, k=6, iters=2)
+    lowest = [
+        {"cell": i, "centroid": r["e"]}
+        for i, r in enumerate(corpus.orderBy("vec_id").limit(6).collect())
+    ]
+    books = [lowest]
+    for _ in range(2):
+        books = ivf._lloyd_step(corpus.select("e"), books, "e", KMEANS_SCALE)
+    i_spread = _inertia(corpus, spread)
+    i_naive = _inertia(corpus, books[0])
     assert i_spread <= i_naive * 1.10, (i_spread, i_naive)
-
-
-def test_farthest_seeding_deterministic_and_better_than_lowid(spark, corpus):
-    """Gonzalez seeding: replayable across runs, and after the same Lloyd
-    refinement it must not lose to the degenerate lowest-id seeding."""
-    from pyetl_spark.operators.ivf import seed_centroids_farthest
-
-    s1 = seed_centroids_farthest(corpus, k=4)
-    s2 = seed_centroids_farthest(corpus, k=4)
-    assert {tuple(r["centroid"]) for r in s1.collect()} == {
-        tuple(r["centroid"]) for r in s2.collect()
-    }
-    # seeds must be spread: pairwise distinct
-    assert s1.select("centroid").distinct().count() == 4
-
-    far = kmeans_fit(corpus, k=4, iters=2, seeding="farthest")
-    low = kmeans_fit(corpus, k=4, iters=2, seeding="lowid")
-    assert kmeans_inertia(corpus, far) <= kmeans_inertia(corpus, low) * 1.05
-
-
-def test_farthest_seeds_cover_extent(spark, corpus):
-    """Every farthest-point seed round picks the max-min-distance vector,
-    so the minimum pairwise seed distance must be >= the min pairwise
-    distance of hash-spread seeds (coverage property, same k)."""
-    import itertools
-
-    from pyetl_spark.operators.ivf import (
-        seed_centroids,
-        seed_centroids_farthest,
-    )
-
-    def min_pairwise(df):
-        cents = [r["centroid"] for r in df.collect()]
-        return min(
-            sum((a - b) ** 2 for a, b in zip(u, v))
-            for u, v in itertools.combinations(cents, 2)
-        )
-
-    far = min_pairwise(seed_centroids_farthest(corpus, k=4))
-    spread = min_pairwise(seed_centroids(corpus, k=4, spread=True))
-    assert far >= spread * 0.99
 
 
 def test_persisted_index_matches_in_memory_path(spark):
@@ -178,7 +152,7 @@ def test_nearest_cell_jvm_and_arrow_paths_bit_identical(spark, corpus):
     k=20 centroids and compare every (id, cell, dist) exactly."""
     import pyetl_spark.operators.ivf as ivf
 
-    cents = ivf.kmeans_fit(corpus, k=20, iters=1)
+    cents = ivf.kmeans_fit_exact(corpus, k=20, iters=1)
     old = ivf._KERNEL_MIN_K
     try:
         ivf._KERNEL_MIN_K = 10_000  # force JVM expression path
@@ -302,9 +276,7 @@ def _kmeans_fit_exact_sql_reference(corpus, k, iters, scale):
         )
     ]
     for _ in range(iters):
-        assigned = ivf._nearest_cell_rows(
-            corpus.select("vec_id", "e"), rows, "e"
-        )
+        assigned = ivf._nearest_cell(corpus.select("vec_id", "e"), rows, "e")
         terms = ", ".join(
             f"(cast(sum(cast(signum(e[{j}]) * "
             f"floor(abs(e[{j}]) * {float(scale)}D + 0.5D) as bigint))"
@@ -372,3 +344,37 @@ def test_kmeans_fit_exact_empty_corpus_raises(spark):
     empty = spark.createDataFrame([], "vec_id long, e array<double>")
     with pytest.raises(ValueError, match="centroids DataFrame is empty"):
         kmeans_fit_exact(empty, k=4, iters=1)
+
+
+def test_lloyd_step_raises_on_int64_overflow(spark):
+    """The fixed-point kernel must not wrap silently where the ANSI SQL
+    form it replaced raised: a coordinate with |x|·scale ≥ 2^63 has no
+    int64 value (raised inside the Arrow stage), and three 4e14
+    coordinates in one cell sum to 1.2e19 fixed-point units, past int64
+    (raised on the driver before any mean is formed)."""
+    from pyspark.errors import PythonException
+
+    schema = "vec_id long, e array<double>"
+    big = spark.createDataFrame([(0, [1e15, 0.0])], schema)
+    with pytest.raises(PythonException, match="ValueError: .*fixed-point"):
+        kmeans_fit_exact(big, k=1, iters=1)
+    wrap = spark.createDataFrame([(i, [4e14, 0.0]) for i in range(3)], schema)
+    with pytest.raises(ValueError, match="could overflow int64"):
+        kmeans_fit_exact(wrap, k=1, iters=1)
+
+
+@pytest.mark.parametrize("k", [8, 20])
+def test_ivf_assign_join_on_cell_assigns_once(spark, corpus, k):
+    """ivf_assign's ``cell`` is non-nullable, so joining it on ``cell``
+    infers no isnotnull filter: that filter was pushed below the
+    projection and evaluated the whole nearest-cell assignment a second
+    time — an extra distance expression below _KERNEL_MIN_K, a second
+    ArrowEvalPython (numpy kernel run) above it."""
+    import pyetl_spark.operators.ivf as ivf
+
+    cents = kmeans_fit_exact(corpus, k=k, iters=1)
+    assert (len(cents.collect()) >= ivf._KERNEL_MIN_K) == (k == 20)
+    joined = ivf_assign(corpus, cents).join(cents, "cell")
+    plan = joined._jdf.queryExecution().executedPlan().toString()
+    assert "isnotnull(array_min" not in plan, plan
+    assert plan.count("ArrowEvalPython") == (1 if k == 20 else 0), plan

@@ -175,12 +175,40 @@ def test_decode_dispatcher_uses_real_lib_when_present(monkeypatch):
     monkeypatch.setitem(sys.modules, "PIL", fake_pil)
     monkeypatch.setitem(sys.modules, "PIL.Image", fake_image_mod)
 
+    from pyetl_spark.operators import multimodal
     from pyetl_spark.operators.multimodal import _decode_image
+
+    # forget a lookup an earlier test cached
+    monkeypatch.setattr(multimodal, "_PIL_IMAGE", None)
 
     out = _decode_image(b"anything", allow_fake=False)  # stub would raise
     assert out.dtype == np.float64
     assert out.shape == (4, 4)
     assert out.max() <= 1.0 and out.min() >= 0.0
+
+
+def test_decode_dispatcher_looks_up_pil_once(monkeypatch):
+    """Python caches no FAILED import, so a per-payload ``from PIL import
+    Image`` searched sys.path again for every payload when PIL is
+    absent. 100 decodes must try the import at most once."""
+    import sys
+
+    from pyetl_spark.operators import multimodal
+
+    class _Probe:
+        calls = 0
+
+        def find_spec(self, name, path=None, target=None):
+            if name == "PIL":
+                _Probe.calls += 1
+            return None
+
+    monkeypatch.setattr(sys, "meta_path", [_Probe(), *sys.meta_path])
+    monkeypatch.setattr(multimodal, "_PIL_IMAGE", None)
+    if "PIL" not in sys.modules:  # absent PIL: the case that re-searched
+        for i in range(100):
+            multimodal._decode_image(b"payload %d" % i, True)
+        assert _Probe.calls <= 1
 
 
 def test_hamming_band_pairs_complete_and_tight(spark):

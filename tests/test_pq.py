@@ -9,10 +9,12 @@ import numpy as np
 import pytest
 from pyspark.sql import functions as F
 
+from pyetl_spark.operators.ivf import kmeans_fit_exact
 from pyetl_spark.operators.pq import (
+    PQ_SCALE,
     adc_topk,
     pq_encode,
-    pq_fit,
+    pq_fit_exact,
     reconstruction_mse,
     split_subvectors,
 )
@@ -57,8 +59,8 @@ def test_split_subvectors_roundtrip(spark):
 
 def test_codebook_shape_and_training_reduces_mse(spark):
     df = _clustered(spark)
-    cb1 = pq_fit(df, m=M, k=K, dim=DIM, iters=1)
-    cb3 = pq_fit(df, m=M, k=K, dim=DIM, iters=3)
+    cb1 = pq_fit_exact(df, m=M, k=K, dim=DIM, iters=1)
+    cb3 = pq_fit_exact(df, m=M, k=K, dim=DIM, iters=3)
     rows = cb3.collect()
     assert {r["sub"] for r in rows} == set(range(M))
     assert all(len(r["centroid"]) == DIM // M for r in rows)
@@ -77,7 +79,7 @@ def test_adc_recall_on_clustered_data(spark):
     """Probes are corpus points: ADC top-1 must land in the probe's own
     cluster, and recall@5 vs exact L2 must be high on separated data."""
     df = _clustered(spark)
-    cb = pq_fit(df, m=M, k=K, dim=DIM, iters=3)
+    cb = pq_fit_exact(df, m=M, k=K, dim=DIM, iters=3)
     codes = pq_encode(df, cb, m=M, dim=DIM)
     probes = df.filter(F.col("vec_id").isin([0, 60, 120, 180])).select(
         F.col("vec_id").alias("probe_id"), "embedding"
@@ -99,14 +101,14 @@ def test_adc_recall_on_clustered_data(spark):
 
 def test_deterministic(spark):
     df = _clustered(spark, n_per=30)
-    c1 = sorted(map(tuple, pq_encode(df, pq_fit(df, m=M, k=K, dim=DIM), m=M, dim=DIM).collect()))
-    c2 = sorted(map(tuple, pq_encode(df, pq_fit(df, m=M, k=K, dim=DIM), m=M, dim=DIM).collect()))
+    c1 = sorted(map(tuple, pq_encode(df, pq_fit_exact(df, m=M, k=K, dim=DIM), m=M, dim=DIM).collect()))
+    c2 = sorted(map(tuple, pq_encode(df, pq_fit_exact(df, m=M, k=K, dim=DIM), m=M, dim=DIM).collect()))
     assert c1 == c2
 
 
 def test_fixture_embeddings_compress(spark):
     emb = load_tables(spark, SF_ORACLE).embeddings
-    cb = pq_fit(emb, m=8, k=16, dim=64, iters=2)
+    cb = pq_fit_exact(emb, m=8, k=16, dim=64, iters=2)
     codes = pq_encode(emb, cb, m=8, dim=64)
     n = emb.count()
     assert codes.count() == n * 8
@@ -121,7 +123,7 @@ def test_ivfpq_recall_and_cell_pruning_on_clustered_data(spark):
     quantization should not LOSE accuracy on centered data."""
     from pyspark.sql import functions as F
 
-    from pyetl_spark.operators.ivf import ivf_assign, kmeans_fit
+    from pyetl_spark.operators.ivf import ivf_assign
     from pyetl_spark.operators.ivfpq import ivfpq_residuals, ivfpq_topk
 
     df = _clustered(spark)
@@ -129,10 +131,10 @@ def test_ivfpq_recall_and_cell_pruning_on_clustered_data(spark):
         "vec_id",
         F.transform("embedding", lambda x: x.cast("double")).alias("e"),
     )
-    cents = kmeans_fit(v, k=4, iters=3)
+    cents = kmeans_fit_exact(v, k=4, iters=3)
     res = ivfpq_residuals(ivf_assign(v, cents), cents)
-    cb = pq_fit(res, id_col="vec_id", vec_col="r", m=M, k=K, dim=DIM,
-                iters=3)
+    cb = pq_fit_exact(res, id_col="vec_id", vec_col="r", m=M, k=K,
+                      dim=DIM, iters=3)
     codes = pq_encode(
         res, cb, id_col="vec_id", vec_col="r", m=M, dim=DIM
     ).join(res.select(F.col("vec_id").alias("id"), "cell"), "id")
@@ -183,14 +185,13 @@ def test_ivfpq_index_delta_closes_daily_ingest_loop(spark, tmp_path):
     fails fast."""
     import os
 
-    from pyetl_spark.operators.ivf import ivf_assign, kmeans_fit
+    from pyetl_spark.operators.ivf import ivf_assign
     from pyetl_spark.operators.ivfpq import (
         ivfpq_encode,
         ivfpq_index_delta,
         ivfpq_residuals,
         ivfpq_topk,
     )
-    from pyetl_spark.operators.pq import pq_fit
 
     df = _clustered(spark)
     v = df.select("vec_id", F.col("embedding").alias("e"))
@@ -198,10 +199,10 @@ def test_ivfpq_index_delta_closes_daily_ingest_loop(spark, tmp_path):
     day1 = v.filter(F.col("vec_id") < 180)
     day2 = v.filter(F.col("vec_id") >= 180)
 
-    cents = kmeans_fit(day1, k=3, iters=3)
+    cents = kmeans_fit_exact(day1, k=3, iters=3)
     res1 = ivfpq_residuals(ivf_assign(day1, cents), cents)
-    cb = pq_fit(res1, id_col="vec_id", vec_col="r", m=M, k=K, dim=DIM,
-                iters=3)
+    cb = pq_fit_exact(res1, id_col="vec_id", vec_col="r", m=M, k=K,
+                      dim=DIM, iters=3)
     codes1 = ivfpq_encode(res1, cb, m=M, dim=DIM, k=K)
     base = str(tmp_path / "ivfpq_lifecycle")
     cents.write.mode("overwrite").parquet(os.path.join(base, "centroids"))
@@ -272,20 +273,18 @@ def test_ivfpq_batch_mse_drift_signal(spark):
     near the build-time MSE, while a shifted batch (vectors far from
     every trained centroid/codeword) scores decisively higher — the
     documented >2x rebuild signal actually fires on a real shift."""
-    from pyetl_spark.operators.ivf import kmeans_fit
     from pyetl_spark.operators.ivfpq import (
         ivfpq_batch_mse,
         ivfpq_residuals,
     )
     from pyetl_spark.operators.ivf import ivf_assign
-    from pyetl_spark.operators.pq import pq_fit
 
     df = _clustered(spark)
     v = df.select("vec_id", F.col("embedding").alias("e"))
-    cents = kmeans_fit(v, k=4, iters=3)
+    cents = kmeans_fit_exact(v, k=4, iters=3)
     res = ivfpq_residuals(ivf_assign(v, cents), cents)
-    cb = pq_fit(res, id_col="vec_id", vec_col="r", m=M, k=K, dim=DIM,
-                iters=3)
+    cb = pq_fit_exact(res, id_col="vec_id", vec_col="r", m=M, k=K,
+                      dim=DIM, iters=3)
     build_mse = ivfpq_batch_mse(v, cents, cb, m=M, dim=DIM)
 
     # in-distribution batch: same generator, fresh ids
@@ -315,20 +314,19 @@ def test_ivfpq_topk_probe_side_stamp_mismatch_raises(spark):
     returns confidently wrong neighbors — it must raise instead.
     Unstamped codes (projected frame) stay accepted, and k is not
     checked (not a search parameter)."""
-    from pyetl_spark.operators.ivf import ivf_assign, kmeans_fit
+    from pyetl_spark.operators.ivf import ivf_assign
     from pyetl_spark.operators.ivfpq import (
         ivfpq_encode,
         ivfpq_residuals,
         ivfpq_topk,
     )
-    from pyetl_spark.operators.pq import pq_fit
 
     df = _clustered(spark, n_per=30)
     v = df.select("vec_id", F.col("embedding").alias("e"))
-    cents = kmeans_fit(v, k=3, iters=2)
+    cents = kmeans_fit_exact(v, k=3, iters=2)
     res = ivfpq_residuals(ivf_assign(v, cents), cents)
-    cb = pq_fit(res, id_col="vec_id", vec_col="r", m=M, k=K, dim=DIM,
-                iters=2)
+    cb = pq_fit_exact(res, id_col="vec_id", vec_col="r", m=M, k=K,
+                      dim=DIM, iters=2)
     codes = ivfpq_encode(res, cb, m=M, dim=DIM, k=K)
     probes = v.filter(F.col("vec_id") < 2).select(
         F.col("vec_id").alias("probe_id"), F.col("e").alias("probe_vec")
@@ -383,3 +381,108 @@ def test_check_stamp_compare_keys_subset(spark):
     ).withMetadata("code", {"ivfpq.m": 8, "ivfpq.dim": 9999})
     check_stamp(partial, "code", keys, "(m, dim)", (8, 64), "t",
                 "boom", compare_keys=keys[:2])
+
+
+def _pq_fit_exact_sql_reference(corpus, m, k, dim, iters, scale):
+    """The SQL Lloyd loop ``pq_fit_exact`` ran before it moved onto the
+    k-means kernel, kept as the reference the kernel must reproduce bit
+    for bit: phash60(sub, id)-spread seeds relabeled by a row_number()
+    window, assignment by a broadcast join of every subvector to its
+    subspace's codewords and a min-(dist, cell) struct per (id, sub),
+    and one groupBy(sub, cell) of exact integer fixed-point sums
+    descaled as (Σq / n) / scale. Returns {(sub, cell): centroid}."""
+    from pyspark.sql import Window
+
+    from pyetl_spark.operators.pq import _sq_dist
+    from pyetl_spark.parity import phash60_seeded
+
+    sub_df = split_subvectors(corpus, "vec_id", "embedding", m, dim)
+    h = phash60_seeded(F.col("sub"), F.col("id"))
+    best_seed = F.min(
+        F.struct(h.alias("h"), F.col("id").alias("i"), F.col("v").alias("v"))
+    )
+    per_bucket = (
+        sub_df.groupBy("sub", F.pmod(h, F.lit(k)).alias("bucket"))
+        .agg(best_seed.alias("b"))
+        .select("sub", "bucket", F.col("b.v").alias("centroid"))
+    )
+    w = Window.partitionBy("sub").orderBy("bucket")
+    codebook = per_bucket.select(
+        "sub", (F.row_number().over(w) - 1).alias("cell"), "centroid"
+    )
+    terms = ", ".join(
+        f"(cast(sum(cast(signum(v[{j}]) * "
+        f"floor(abs(v[{j}]) * {float(scale)}D + 0.5D) as bigint))"
+        f" as double) / cast(count(1) as double)) / {float(scale)}D"
+        for j in range(dim // m)
+    )
+    for _ in range(iters):
+        paired = sub_df.join(F.broadcast(codebook), "sub")
+        d = _sq_dist(F.col("v"), F.col("centroid"))
+        best = F.min(F.struct(d.alias("d"), F.col("cell").alias("c")))
+        assigned = paired.groupBy("id", "sub").agg(
+            F.first("v").alias("v"), best.alias("b")
+        )
+        codebook = (
+            assigned.select("sub", F.col("b.c").alias("cell"), "v")
+            .groupBy("sub", "cell")
+            .agg(F.expr(f"array({terms})").alias("centroid"))
+        )
+        codebook = corpus.sparkSession.createDataFrame(
+            codebook.collect(), codebook.schema
+        )
+    return {
+        (r["sub"], r["cell"]): list(r["centroid"]) for r in codebook.collect()
+    }
+
+
+@pytest.mark.parametrize("n_vecs", [500, 12])
+@pytest.mark.parametrize("parts", [1, 7])
+def test_pq_fit_exact_kernel_matches_sql_reference(spark, n_vecs, parts):
+    """pq_fit_exact on the shared Lloyd kernel (m subspaces per Arrow
+    stage) must give exactly the codebooks of the SQL loop it replaced,
+    for m=8, k=16 and any partitioning — including 12 vectors, where
+    some subspace has an empty seed bucket and fewer than k codewords."""
+    emb = load_tables(spark, SF_ORACLE).embeddings.filter(
+        F.col("vec_id") < n_vecs
+    )
+    split = (
+        emb.coalesce(1)
+        if parts == 1
+        else emb.repartitionByRange(parts, "vec_id")
+    )
+    want = _pq_fit_exact_sql_reference(split, 8, 16, 64, 2, PQ_SCALE)
+    if n_vecs == 12:
+        assert min(
+            sum(1 for s, _ in want if s == sub) for sub in range(8)
+        ) < 16
+    got = {
+        (r["sub"], r["cell"]): list(r["centroid"])
+        for r in pq_fit_exact(split, m=8, k=16, dim=64, iters=2).collect()
+    }
+    assert sorted(got) == sorted(want)
+    for key, cent in want.items():
+        assert [x.hex() for x in got[key]] == [x.hex() for x in cent]
+
+
+def test_pq_fit_exact_jobs_and_encode_without_shuffle(spark):
+    """Seeding is one aggregate collect (two jobs under AQE) and each
+    Lloyd iteration one job; pq_encode is a narrow projection over the
+    collected codebook — its plan has no exchange."""
+    import os
+
+    sf001 = os.path.join(os.path.dirname(SF_ORACLE), "sf0.01")
+    emb = load_tables(spark, sf001).embeddings
+    sc = spark.sparkContext
+    iters = 2
+    sc.setJobGroup("pq_fit_exact_jobs", "job-count pin")
+    try:
+        cb = pq_fit_exact(emb, m=8, k=16, dim=64, iters=iters)
+    finally:
+        sc._jsc.clearJobGroup()
+    jobs = sc.statusTracker().getJobIdsForGroup("pq_fit_exact_jobs")
+    assert 0 < len(jobs) <= 2 + iters
+    codes = pq_encode(emb, cb, m=8, dim=64)
+    plan = codes._jdf.queryExecution().executedPlan().toString()
+    assert "Exchange" not in plan, plan
+    assert codes.count() == 8 * emb.count()

@@ -1137,14 +1137,14 @@ def test_stream_vector_ingest_checkpoint_recovery_and_replay(spark, scratch):
     ingest fails fast against the stamped base table."""
     import math
 
-    from pyetl_spark.operators.ivf import ivf_assign, kmeans_fit
+    from pyetl_spark.operators.ivf import ivf_assign, kmeans_fit_exact
     from pyetl_spark.operators.ivfpq import (
         ivfpq_encode,
         ivfpq_index_delta,
         ivfpq_residuals,
         ivfpq_topk,
     )
-    from pyetl_spark.operators.pq import pq_fit
+    from pyetl_spark.operators.pq import pq_fit_exact
     from pyetl_spark.streaming.corpus import (
         encode_vectors_batch,
         read_vecs_stream,
@@ -1169,10 +1169,10 @@ def test_stream_vector_ingest_checkpoint_recovery_and_replay(spark, scratch):
     base = spark.createDataFrame(rows, ["vec_id", "embedding"]).select(
         "vec_id", F.col("embedding").alias("e")
     )
-    cents = kmeans_fit(base, k=3, iters=3)
+    cents = kmeans_fit_exact(base, k=3, iters=3)
     res = ivfpq_residuals(ivf_assign(base, cents), cents)
-    cb = pq_fit(res, id_col="vec_id", vec_col="r", m=M, k=K, dim=DIM,
-                iters=3)
+    cb = pq_fit_exact(res, id_col="vec_id", vec_col="r", m=M, k=K,
+                      dim=DIM, iters=3)
     base_codes = ivfpq_encode(res, cb, m=M, dim=DIM, k=K)
 
     src = os.path.join(scratch, "vec_src")
@@ -1291,9 +1291,9 @@ def test_compact_ingested_codes_newest_generation_wins(spark, scratch):
     cell-partitioned layout."""
     import math
 
-    from pyetl_spark.operators.ivf import ivf_assign, kmeans_fit
+    from pyetl_spark.operators.ivf import ivf_assign, kmeans_fit_exact
     from pyetl_spark.operators.ivfpq import ivfpq_encode, ivfpq_residuals
-    from pyetl_spark.operators.pq import pq_fit
+    from pyetl_spark.operators.pq import pq_fit_exact
     from pyetl_spark.streaming.corpus import (
         compact_ingested_codes,
         encode_vectors_batch,
@@ -1312,10 +1312,10 @@ def test_compact_ingested_codes_newest_generation_wins(spark, scratch):
     base_v = spark.createDataFrame(rows, ["vec_id", "embedding"]).select(
         "vec_id", F.col("embedding").alias("e")
     )
-    cents = kmeans_fit(base_v, k=3, iters=3)
+    cents = kmeans_fit_exact(base_v, k=3, iters=3)
     res = ivfpq_residuals(ivf_assign(base_v, cents), cents)
-    cb = pq_fit(res, id_col="vec_id", vec_col="r", m=M, k=K, dim=DIM,
-                iters=3)
+    cb = pq_fit_exact(res, id_col="vec_id", vec_col="r", m=M, k=K,
+                      dim=DIM, iters=3)
     base_path = os.path.join(scratch, "base_codes")
     ivfpq_encode(res, cb, m=M, dim=DIM, k=K).write.partitionBy(
         "cell"
