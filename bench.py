@@ -45,7 +45,8 @@ band check against the last driver record is still computed and
 recorded under "noise_band". Subset runs (SPARK_GRAFT_ONLY — the
 isolated-triage path) stay single-pass: their medians are only ever
 compared to other isolated runs. SPARK_GRAFT_SINGLE_PASS=1 forces the
-old single-pass behavior for quick local iteration.
+old single-pass behavior for quick local iteration (a flag set to 0,
+false, no or the empty string counts as unset: ``env_flag``).
 """
 
 from __future__ import annotations
@@ -427,7 +428,7 @@ def main() -> None:
     # spurious sub-second "regressions" on untouched code (the r15
     # scoreboard). Both raw passes are preserved in the detail record.
     two_pass: dict | None = None
-    if only is None and not os.environ.get("SPARK_GRAFT_SINGLE_PASS"):
+    if only is None and not env_flag("SPARK_GRAFT_SINGLE_PASS"):
         t2, s2, b2 = _run_suite(spark, headline, sf_dir)
         two_pass = {
             "pass1_queries": dict(timings),
@@ -550,7 +551,7 @@ def main() -> None:
     # comparison target is the sf0.1 timing of the SAME query, so the
     # interesting number is the ratio, not the absolute)
     sf1 = None if only else _sf1_dir()
-    if sf1 is not None and not os.environ.get("SPARK_GRAFT_SKIP_SF1"):
+    if sf1 is not None and not env_flag("SPARK_GRAFT_SKIP_SF1"):
         sf1_timings: dict[str, float] = {}
         for key in SF1_QUERIES:
             # best-of-2, not single-shot: this loop runs at the END of a
@@ -644,6 +645,14 @@ def main() -> None:
             k: v["isolated"] for k, v in isolated.items()
         }
     print(compact_stdout_line(compact))
+
+
+def env_flag(name: str) -> bool:
+    """Whether the environment switch ``name`` is on: set to anything
+    but 0, false, no or the empty string (any case), so ``=0`` reads as
+    off, the way a reader expects."""
+    value = os.environ.get(name, "").strip().lower()
+    return value not in ("", "0", "false", "no")
 
 
 def merge_min_of_two(

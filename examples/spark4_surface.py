@@ -77,10 +77,8 @@ def main() -> None:
     from pyetl_spark.operators.pydatasource import (
         CounterStreamSource,
         SyntheticEventsSource,
-        ship_by_value,
     )
 
-    ship_by_value()
     spark.dataSource.register(SyntheticEventsSource)
     spark.dataSource.register(CounterStreamSource)
     batch = (

@@ -25,13 +25,7 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-
-def _ship_module_by_value() -> None:
-    from pyspark import cloudpickle
-
-    import pyetl_spark.operators.bpe as _self
-
-    cloudpickle.register_pickle_by_value(_self)
+from pyetl_spark.operators.pyworker import worker_entry
 
 
 def word_freqs(docs: DataFrame, text_col: str = "text") -> DataFrame:
@@ -146,9 +140,9 @@ def bpe_apply(
     The merge list ships inside the task closure (it is the tokenizer —
     kBs); encoding is per-row local, so this scales with a plain
     Arrow-batched pandas UDF, no shuffle."""
-    _ship_module_by_value()
 
     @F.pandas_udf("array<string>")
+    @worker_entry
     def encode(s: pd.Series) -> pd.Series:
         return s.map(lambda w: bpe_encode_word(w, merges))
 

@@ -29,14 +29,7 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-
-def _ship_module_by_value() -> None:
-    """Ship this module inside task closures (see multimodal.py)."""
-    from pyspark import cloudpickle
-
-    import pyetl_spark.operators.ewma as _self
-
-    cloudpickle.register_pickle_by_value(_self)
+from pyetl_spark.operators.pyworker import worker_entry
 
 
 def ewma(
@@ -51,7 +44,6 @@ def ewma(
     """DataFrame(key, ts, tiebreak?, value, ewma) — per-key EWMA in
     event-time order. ``adjust=False`` pandas semantics: the plain
     recurrence with y_0 = x_0."""
-    _ship_module_by_value()
     order = [ts_col] + ([tiebreak] if tiebreak else [])
     cols = [key, *order, value_col]
 
@@ -67,6 +59,7 @@ def ewma(
     a = float(alpha)
     om = 1.0 - a
 
+    @worker_entry
     def fit(pdf: pd.DataFrame) -> pd.DataFrame:
         pdf = pdf.sort_values(order, kind="mergesort")
         xs = pdf[value_col].to_numpy(dtype="float64")
@@ -120,7 +113,6 @@ def ewma_chunked(
     rows(key)/n_slices fits a task — the knob trades sequential passes
     for memory. The streaming twin carries the same state per
     micro-batch via applyInPandasWithState."""
-    _ship_module_by_value()
     order = [ts_col] + ([tiebreak] if tiebreak else [])
     cols = [key, *order, value_col]
     a = float(alpha)
@@ -156,6 +148,7 @@ def ewma_chunked(
         ),
     )
 
+    @worker_entry
     def fit_seeded(pdf: pd.DataFrame) -> pd.DataFrame:
         pdf = pdf.sort_values(order, kind="mergesort")
         seed = pdf["_y_in"].iloc[0]

@@ -30,17 +30,11 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-
-def _ship_module_by_value() -> None:
-    """Ship this module inside task closures (see multimodal.py)."""
-    from pyspark import cloudpickle
-
-    import pyetl_spark.operators.heavy_hitters as _self
-
-    cloudpickle.register_pickle_by_value(_self)
+from pyetl_spark.operators.pyworker import worker_entry
 
 
 def _mg_pass(col: str, k: int):
+    @worker_entry
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         counters: dict = {}
         for pdf in batches:
@@ -75,7 +69,6 @@ def heavy_hitters(
     tighter candidate superset (fewer phase-2 keys). Exactness does not
     depend on slack; only phase-2 cost does.
     """
-    _ship_module_by_value()
     k = max(2, int(slack / phi))
     candidates = (
         df.select(col)

@@ -18,13 +18,7 @@ from __future__ import annotations
 import pandas as pd
 from pyspark.sql import DataFrame
 
-
-def _ship_module_by_value() -> None:
-    from pyspark import cloudpickle
-
-    import pyetl_spark.operators.holt as _self
-
-    cloudpickle.register_pickle_by_value(_self)
+from pyetl_spark.operators.pyworker import worker_entry
 
 
 def holt_fit_forecast(
@@ -64,8 +58,8 @@ def holt_forecast(
     Output: (key, level, trend, h, forecast) — one row per key per
     horizon step. Keys with < 2 observations are dropped (no trend is
     estimable)."""
-    _ship_module_by_value()
 
+    @worker_entry
     def run(pdf: pd.DataFrame) -> pd.DataFrame:
         pdf = pdf.sort_values(order_col)
         xs = pdf[value_col].astype(float).tolist()

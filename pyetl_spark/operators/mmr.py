@@ -20,13 +20,7 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-
-def _ship_module_by_value() -> None:
-    from pyspark import cloudpickle
-
-    import pyetl_spark.operators.mmr as _self
-
-    cloudpickle.register_pickle_by_value(_self)
+from pyetl_spark.operators.pyworker import worker_entry
 
 
 _OUT_SCHEMA = "probe_id long, cand_id long, mmr_rank int, mmr_score double"
@@ -72,8 +66,8 @@ def mmr_rerank(
     output shape of any top-N retrieval stage. Returns (probe_id,
     cand_id, mmr_rank, mmr_score), mmr_rank 1-based in selection order.
     """
-    _ship_module_by_value()
 
+    @worker_entry
     def run(pdf: pd.DataFrame) -> pd.DataFrame:
         pdf = pdf.sort_values("cand_id").reset_index(drop=True)
         E = np.stack(pdf["cand_vec"].to_numpy()).astype(np.float64)
@@ -122,8 +116,8 @@ def mmr_rerank_exact(
     normalize-then-BLAS-matmul. ``mmr_select`` itself is already exact
     (elementwise score arithmetic, exact max, id tiebreak), so only the
     similarity kernel changes. Same two-stage scale shape."""
-    _ship_module_by_value()
 
+    @worker_entry
     def run(pdf: pd.DataFrame) -> pd.DataFrame:
         pdf = pdf.sort_values("cand_id").reset_index(drop=True)
         E = np.stack(pdf["cand_vec"].to_numpy()).astype(np.float64)

@@ -14,6 +14,10 @@ through Python with per-batch memory only, keeps blobs out of shuffles
 (feature extraction happens before any wide op), and carries metadata in a
 typed struct column so filters on width/height/codec stay JVM-side and
 pushdown-eligible.
+
+Every ``mapInPandas`` function here is a ``pyworker.worker_entry``
+function: it ships this module by value, so workers need no repo on
+their path, and skips PySpark's per-task re-read of ``pyspark.zip``.
 """
 
 from __future__ import annotations
@@ -26,25 +30,8 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from pyetl_spark.operators.pyworker import worker_entry
 
-def _ship_module_by_value() -> None:
-    """Make this module's functions picklable WITHOUT the repo on the
-    executor PYTHONPATH: mapInPandas closures here call module-level
-    helpers (_decode_image_stub, cdc_boundaries, _GEAR), which
-    cloudpickle serializes by REFERENCE to `pyetl_spark...` — importable
-    in pytest runs (cwd = repo) but not when a driver harness imports
-    __spark_entry__ from elsewhere. Registering the module for
-    by-value pickling ships the code inside the task closure instead —
-    self-contained tasks, the same posture a real cluster needs unless
-    the package is installed on every executor."""
-    # NB: must be pyspark's VENDORED cloudpickle — the workers deserialize
-    # with pyspark.serializers, and registrations on the standalone
-    # cloudpickle package are invisible to it
-    from pyspark import cloudpickle
-
-    import pyetl_spark.operators.multimodal as _self
-
-    cloudpickle.register_pickle_by_value(_self)
 
 #: typed metadata struct carried next to every media blob
 MEDIA_META_DDL = (
@@ -170,8 +157,8 @@ def extract_features(
     time; output yields one DataFrame per input batch (constant memory —
     never accumulate across batches).
     """
-    _ship_module_by_value()
 
+    @worker_entry
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             feats = []
@@ -216,8 +203,8 @@ def resize_images(
     arithmetic step — exact for the stub's own byte-derived pixels
     (b/255.0*255.0 rounds back to b for every b, probed) — which lets
     downstream frame hashes be oracle-replayed."""
-    _ship_module_by_value()
 
+    @worker_entry
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             out_payloads, metas = [], []
@@ -259,8 +246,8 @@ def sample_frames(
     as row-slices of the pseudo-image. Frames are emitted as QUANTIZED
     uint8 bytes (same portable contract and rounding as resize_images),
     so frame content hashes are oracle-replayable."""
-    _ship_module_by_value()
 
+    @worker_entry
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             ids, idxs, frames = [], [], []
@@ -343,8 +330,8 @@ def chunk_payloads(
     same chunk hashes. Same mapInPandas streaming contract as the other
     operators: per-batch memory only, blobs never enter a shuffle —
     only the 40-byte chunk records do."""
-    _ship_module_by_value()
 
+    @worker_entry
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             ids, idxs, offs, sizes, hashes = [], [], [], [], []
@@ -405,8 +392,8 @@ def media_ahash(
     batches in, bigint fingerprints out, band join downstream — is the
     production shape.
     """
-    _ship_module_by_value()
 
+    @worker_entry
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             hashes = []

@@ -28,6 +28,8 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from pyetl_spark.operators.pyworker import worker_entry
+
 #: exact-path parameters — single source shared with the DuckDB oracle
 #: generator (queries/llm_vec._pca_oracle) so a call-site change cannot
 #: desynchronize engine and oracle.
@@ -35,19 +37,10 @@ PCA_SCALE = 1e4
 PCA_ITERS = 60
 
 
-def _ship_module_by_value() -> None:
-    """Ship this module inside task closures (see multimodal.py) so the
-    mapInPandas closure works when the repo isn't on executor paths."""
-    from pyspark import cloudpickle
-
-    import pyetl_spark.operators.pca as _self
-
-    cloudpickle.register_pickle_by_value(_self)
-
-
 def _moments(vec_col: str, dim: int):
     """mapInPandas fn: per Arrow batch, one row of flattened moments."""
 
+    @worker_entry
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             if pdf.empty:
@@ -80,7 +73,6 @@ def top_component(
     starts from a fixed seed and the sign is canonicalized so the
     largest-|coordinate| entry is positive.
     """
-    _ship_module_by_value()
     if dim is None:
         dim = len(
             df.select(vec_col).filter(F.size(vec_col) > 0).first()[0]
@@ -150,6 +142,7 @@ def _moments_quantized(vec_col: str, dim: int, scale: float):
     over fixed-point-quantized coordinates (int64 matmul — numpy integer
     matmul is exact and order-free, unlike the float path above)."""
 
+    @worker_entry
     def run(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
             if pdf.empty:
@@ -204,7 +197,6 @@ def top_component_exact(
     identical bits. Integer-overflow headroom: |q| <= scale·max|x|, so
     Σq_iq_j fits int64 up to ~2^63/(scale·max|x|)^2 rows — at true
     100 TB scale escalate the moment sums to DECIMAL(38,0)."""
-    _ship_module_by_value()
     schema = "sum_outer array<long>, sum_vec array<long>, n bigint"
     parts = df.select(vec_col).mapInPandas(
         _moments_quantized(vec_col, dim, scale), schema=schema

@@ -19,6 +19,11 @@ oracle-checkable → Tier A key `source_python_datasource`) and
 `CounterStreamSource` (streaming — offset bookkeeping replaces the static
 partition plan; exactly-once resume is pinned by the Tier C test in
 tests/test_streaming.py).
+
+The readers' ``read`` methods are ``pyworker.worker_entry`` functions,
+so importing this module registers it for by-value pickling: the
+DataSource classes deserialize on workers without the repo on their
+``PYTHONPATH``.
 """
 
 from __future__ import annotations
@@ -32,23 +37,11 @@ from pyspark.sql.datasource import (
     SimpleDataSourceStreamReader,
 )
 
+from pyetl_spark.operators.pyworker import worker_entry
+
 #: Knuth's multiplicative-hash constant — a cheap deterministic scrambler
 #: both engines can evaluate exactly in 64-bit integer arithmetic.
 _MIX = 2654435761
-
-
-def ship_by_value() -> None:
-    """Register this module for by-value cloudpickle so the DataSource
-    class deserializes on Python workers WITHOUT the repo on their
-    PYTHONPATH (same posture as operators/multimodal.py: self-contained
-    task closures unless the package is installed cluster-wide). Must be
-    pyspark's VENDORED cloudpickle — the workers deserialize with
-    pyspark.serializers, which ignores the standalone package's registry."""
-    from pyspark import cloudpickle
-
-    import pyetl_spark.operators.pydatasource as _self
-
-    cloudpickle.register_pickle_by_value(_self)
 
 
 class SyntheticEventsReader(DataSourceReader):
@@ -62,6 +55,7 @@ class SyntheticEventsReader(DataSourceReader):
         # one InputPartition per planned task; value = partition ordinal
         return [InputPartition(i) for i in range(self._parts)]
 
+    @worker_entry
     def read(self, partition: InputPartition) -> Iterator[tuple]:
         # contiguous id slab per partition → no overlap, full coverage
         p = partition.value
@@ -102,11 +96,13 @@ class CounterStreamReader(SimpleDataSourceStreamReader):
     def initialOffset(self) -> dict:
         return {"n": 0}
 
+    @worker_entry
     def read(self, start: dict):  # noqa: ANN201 — (iterator, next_offset)
         lo = int(start["n"])
         hi = lo + self._step
         return (self._rows(lo, hi), {"n": hi})
 
+    @worker_entry
     def readBetweenOffsets(self, start: dict, end: dict):  # noqa: ANN201
         return self._rows(int(start["n"]), int(end["n"]))
 

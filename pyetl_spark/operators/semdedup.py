@@ -8,7 +8,8 @@ k × O((n/k)²) — pick k ∝ n so mean cluster size stays bounded (SemDeDup
 used k=50k for LAION-scale corpora), and the per-cluster work is a small
 dense matmul. Clustering is ``ivf.kmeans_fit_exact`` (one Arrow stage and
 no corpus shuffle per Lloyd iteration); the per-cluster pass is ONE
-applyInPandas shuffle on the cell id, NumPy-vectorized inside. Every
+applyInPandas shuffle on the cell id, NumPy-vectorized inside (a
+``pyworker.worker_entry`` function, as every Python kernel is). Every
 float op is a fixed-order IEEE step, so a DuckDB oracle replays the
 result bit for bit.
 
@@ -25,16 +26,7 @@ import pandas as pd
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
-
-def _ship_module_by_value() -> None:
-    """applyInPandas closures reference this module's helpers; ship the
-    module by value so executors don't need the repo on PYTHONPATH (must
-    be pyspark's vendored cloudpickle — see operators/multimodal.py)."""
-    from pyspark import cloudpickle
-
-    import pyetl_spark.operators.semdedup as _self
-
-    cloudpickle.register_pickle_by_value(_self)
+from pyetl_spark.operators.pyworker import worker_entry
 
 
 _OUT_SCHEMA = "vec_id long, cell int, keep boolean, dup_of long"
@@ -100,12 +92,12 @@ def semdedup_assign_exact(
     larger than ``cap`` raises."""
     from pyetl_spark.operators.ivf import ivf_assign, kmeans_fit_exact
 
-    _ship_module_by_value()
     v = vectors.select(
         F.col(id_col).alias("vec_id"), F.col(vec_col).alias("e")
     )
     assigned = ivf_assign(v, kmeans_fit_exact(v, k=k, iters=iters))
 
+    @worker_entry
     def run(pdf: pd.DataFrame) -> pd.DataFrame:
         return _dedup_cell_exact(pdf, tau, cap)
 

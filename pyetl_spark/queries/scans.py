@@ -314,12 +314,11 @@ def source_python_datasource(spark: SparkSession, sf_dir: str) -> DataFrame:
     Synthetic by construction, so sf-independent (like `source_range`);
     the API surface under test is partition planning + per-task iteration,
     not data volume."""
-    from pyetl_spark.operators.pydatasource import (
-        SyntheticEventsSource,
-        ship_by_value,
-    )
+    # importing the module registers it for by-value pickling (its
+    # reader methods are pyworker.worker_entry functions), so workers
+    # need no repo on their PYTHONPATH
+    from pyetl_spark.operators.pydatasource import SyntheticEventsSource
 
-    ship_by_value()  # workers may not have the repo on PYTHONPATH
     # Registration is session-global and re-registration REPLACES the
     # previous entry (probed on pyspark 4.1: DataSourceManager logs a WARN
     # and overwrites), so register unconditionally — no exception-text

@@ -10,7 +10,10 @@ same bits as the JVM expression; numpy reductions (grouped UDAF) may reorder
 — their outputs get the 4dp parity round where ties are measure-zero.
 
 Scale: pandas UDFs (Arrow, vectorized) are the only Python form allowed in a
-100 TB hot path; udf_scalar_python exists for parity, not for scale.
+100 TB hot path; udf_scalar_python exists for parity, not for scale. Every
+Python body here is an ``operators/pyworker.worker_entry`` function, which
+spares each task after a worker's first PySpark's ~0.2 s re-read of
+``pyspark.zip``.
 """
 
 from __future__ import annotations
@@ -22,6 +25,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf, udf, udtf
 
+from pyetl_spark.operators.pyworker import worker_entry
 from pyetl_spark.parity import FXP, R, rnd
 from pyetl_spark.registry import query
 from pyetl_spark.tables import load_tables
@@ -32,6 +36,7 @@ def _py_net_revenue_udf():
     UDF/UDTF decorators parse DDL types and need an active session."""
 
     @udf("double")
+    @worker_entry
     def _py_net_revenue(price: float, discount: float, tax: float) -> float:
         if price is None:
             return None
@@ -44,6 +49,7 @@ def _pd_net_revenue_udf():
     """Vectorized Arrow UDF — same contract, batch at a time."""
 
     @pandas_udf("double")
+    @worker_entry
     def _pd_net_revenue(
         price: pd.Series, discount: pd.Series, tax: pd.Series
     ) -> pd.Series:
@@ -56,6 +62,7 @@ def _pd_weighted_mean_udf():
     """Grouped-agg pandas UDF: quantity-weighted mean price."""
 
     @pandas_udf("double")
+    @worker_entry
     def _pd_weighted_mean(price: pd.Series, qty: pd.Series) -> float:
         return float((price * qty).sum() / qty.sum())
 
@@ -67,6 +74,7 @@ def _token_explode_udtf():
 
     @udtf(returnType="pos int, tok string")
     class _TokenExplode:
+        @worker_entry
         def eval(self, text: str):
             if text:
                 for i, tok in enumerate(text.split(" ")):
@@ -217,6 +225,7 @@ def grouped_map_applyInPandas(spark: SparkSession, sf_dir: str) -> DataFrame:
         "o_orderkey", "o_orderpriority", "o_totalprice"
     )
 
+    @worker_entry
     def demean(pdf: pd.DataFrame) -> pd.DataFrame:
         p = pdf["o_totalprice"].to_numpy()
         # parity.fxp replayed in numpy: sign(x) * floor(|x|*100 + 0.5)
@@ -275,6 +284,7 @@ def map_partitions_arrow(spark: SparkSession, sf_dir: str) -> DataFrame:
         "l_orderkey", "l_linenumber", "l_extendedprice", "l_discount"
     )
 
+    @worker_entry
     def batch_revenue(
         batches: Iterator[pd.DataFrame],
     ) -> Iterator[pd.DataFrame]:
@@ -306,6 +316,7 @@ def _pd_frame_sum_udf():
     4-value sums are bit-identical to the oracle's windowed sum."""
 
     @pandas_udf("double")
+    @worker_entry
     def _pd_frame_sum(v: pd.Series) -> float:
         return v.sum(min_count=1)
 
@@ -446,6 +457,7 @@ def text_pack_greedy(spark: SparkSession, sf_dir: str) -> DataFrame:
     (``used > 0`` is implicit: n_tokens >= 1, so used >= 1 after row 1.)"""
     budget = 256
 
+    @worker_entry
     def pack(pdf: pd.DataFrame) -> pd.DataFrame:
         pdf = pdf.sort_values("doc_id").reset_index(drop=True)
         pack_ids, pid, used = [], 0, 0
@@ -538,6 +550,7 @@ def _lang_profile_udtf():
             self._docs = 0
             self._toks = 0
 
+        @worker_entry
         def eval(self, row) -> None:  # noqa: ANN001
             if self._lang is not None and row["lang"] != self._lang:
                 # PARTITION BY contract: one group per instance — fail loud
@@ -603,6 +616,7 @@ def _arrow_net_revenue_udf():
     # `from __future__ import annotations` stringifies per-arg hints, so
     # pyspark's hint-based eval-type inference can't see pa.Array here
     @arrow_udf("double", ArrowUDFType.SCALAR)
+    @worker_entry
     def _arrow_net_revenue(price, discount, tax):
         one = pa.scalar(1.0)
         return pc.multiply(
@@ -663,6 +677,7 @@ def _arrow_token_stats_udtf():
 
     @arrow_udtf(returnType="doc_id bigint, n_tokens bigint, n_uppercase bigint")
     class _TokenStats:
+        @worker_entry
         def eval(self, batch: pa.RecordBatch):
             doc_id = batch.column("doc_id")
             text = batch.column("text")

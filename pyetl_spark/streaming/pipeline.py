@@ -24,6 +24,8 @@ from pyspark.sql.types import (
     TimestampType,
 )
 
+from pyetl_spark.operators.pyworker import worker_entry
+
 #: JSON-lines schema for file-fed event streams (ts as ISO-8601 string in
 #: the files, parsed to TimestampType here — FIXTURES.md Tier-C note).
 EVENTS_STREAM_SCHEMA = StructType(
@@ -129,6 +131,7 @@ def stateful_anomaly_counter(events: DataFrame) -> DataFrame:
     built-in aggregates can't express.
     """
 
+    @worker_entry
     def update(
         key: tuple,
         pdfs: Iterator[pd.DataFrame],
@@ -184,6 +187,7 @@ def stateful_ewma(events: DataFrame, alpha: float = 0.3) -> DataFrame:
     Emits one row per (user, batch) with the post-batch smoothed value.
     """
 
+    @worker_entry
     def update(
         key: tuple,
         pdfs: Iterator[pd.DataFrame],

@@ -9,6 +9,15 @@ TIMESTAMP_NTZ → cast to TIMESTAMP, exact because the session tz is UTC).
 Either way DuckDB sees the same microsecond values natively, so oracle hashes
 are unaffected by the fixture's storage type.
 
+The nine other tables have a fixed shape, so their schemas are declared here,
+as a catalog would hold them, and read with ``spark.read.schema``: inferring a
+parquet schema runs one Spark job per load (97 ms against 17 ms with the
+schema given, sf0.01 ``documents``/``embeddings``, 4-core local).
+``tests/test_tables.py`` pins each declared schema to the inferred one on
+every fixture dir present. A file that lacks a declared column reads it as
+null, as any schema-on-read catalog does. ``events`` keeps inference, because
+its storage type is the one that has varied.
+
 At 100 TB the loader is where partition discovery, ANALYZE stats, and bucketed
 table registration would live; for the fixtures it stays a thin wrapper so
 every query compiles to a plain vectorized parquet scan with pushdown intact.
@@ -35,9 +44,48 @@ TABLE_NAMES = (
 )
 
 
+#: Declared schemas of the fixed-shape tables (every table but ``events``).
+TABLE_SCHEMAS = {
+    "region": "r_regionkey INT, r_name STRING",
+    "nation": "n_nationkey INT, n_name STRING, n_regionkey INT",
+    "customer": (
+        "c_custkey BIGINT, c_name STRING, c_nationkey INT,"
+        " c_acctbal DOUBLE, c_mktsegment STRING"
+    ),
+    "supplier": (
+        "s_suppkey BIGINT, s_name STRING, s_nationkey INT, s_acctbal DOUBLE"
+    ),
+    "part": (
+        "p_partkey BIGINT, p_name STRING, p_brand STRING, p_type STRING,"
+        " p_size INT, p_retailprice DOUBLE"
+    ),
+    "orders": (
+        "o_orderkey BIGINT, o_custkey BIGINT, o_orderstatus STRING,"
+        " o_totalprice DOUBLE, o_orderdate TIMESTAMP_NTZ,"
+        " o_orderpriority STRING"
+    ),
+    "lineitem": (
+        "l_orderkey BIGINT, l_partkey BIGINT, l_suppkey BIGINT,"
+        " l_linenumber INT, l_quantity DOUBLE, l_extendedprice DOUBLE,"
+        " l_discount DOUBLE, l_tax DOUBLE, l_returnflag STRING,"
+        " l_linestatus STRING, l_shipdate TIMESTAMP_NTZ"
+    ),
+    "documents": (
+        "doc_id BIGINT, text STRING, lang STRING, source STRING,"
+        " n_chars BIGINT"
+    ),
+    "embeddings": "vec_id BIGINT, embedding ARRAY<FLOAT>, label INT",
+}
+
+
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    """Read one fixture table, normalizing schema quirks."""
-    df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
+    """Read one fixture table, normalizing schema quirks. A table with a
+    declared schema loads without a Spark job; ``events`` infers its
+    schema (one job) and normalizes ``ts``."""
+    path = f"{sf_dir}/{name}.parquet"
+    if name in TABLE_SCHEMAS:
+        return spark.read.schema(TABLE_SCHEMAS[name]).parquet(path)
+    df = spark.read.parquet(path)
     if name == "events":
         ts_type = dict(df.dtypes).get("ts")
         if ts_type == "bigint":
@@ -56,8 +104,9 @@ class Tables:
     """Lazy named access to the fixture tables of one scale-factor dir.
 
     ``t.lineitem`` etc. return DataFrames; each access builds a fresh scan
-    (cheap — plan node only, no data moves) so callers can't accidentally
-    share cached plans across queries.
+    so callers can't accidentally share cached plans across queries. The
+    nine tables with a declared schema cost a plan node only; ``events``
+    also runs its schema-inference job on every access.
     """
 
     def __init__(self, spark: SparkSession, sf_dir: str):

@@ -10,6 +10,8 @@ without running Spark.
 
 import json
 
+import pytest
+
 import bench
 
 
@@ -85,3 +87,20 @@ def test_merge_min_of_two_keeps_pass1_keys_missing_from_pass2():
     # the second pass lacks keeps its pass-1 value
     merged = bench.merge_min_of_two({"a": 1.234}, {})
     assert merged == {"a": 1.234}
+
+
+@pytest.mark.parametrize(
+    "value, on",
+    [
+        (None, False), ("", False), ("0", False), ("false", False),
+        ("No", False), (" FALSE ", False),
+        ("1", True), ("true", True), ("yes", True),
+    ],
+)
+def test_env_flag_reads_the_value_not_its_presence(monkeypatch, value, on):
+    """SPARK_GRAFT_SINGLE_PASS=0 must not force a single pass."""
+    if value is None:
+        monkeypatch.delenv("SPARK_GRAFT_SINGLE_PASS", raising=False)
+    else:
+        monkeypatch.setenv("SPARK_GRAFT_SINGLE_PASS", value)
+    assert bench.env_flag("SPARK_GRAFT_SINGLE_PASS") is on

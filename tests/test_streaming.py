@@ -655,12 +655,8 @@ def test_python_streaming_datasource_resumes_from_checkpoint(spark, scratch):
     availableNow runs on ONE checkpoint must produce consecutive,
     non-overlapping id ranges — the offset log drives exactly-once resume
     for a source we wrote ourselves."""
-    from pyetl_spark.operators.pydatasource import (
-        CounterStreamSource,
-        ship_by_value,
-    )
+    from pyetl_spark.operators.pydatasource import CounterStreamSource
 
-    ship_by_value()
     with contextlib.suppress(Exception):
         spark.dataSource.register(CounterStreamSource)
     ckpt = os.path.join(scratch, "ckpt_pyds")
