@@ -17,11 +17,22 @@ task's invalidation re-reads no archive. The cache is a documented dict
 that the import system refills on demand: a later import that needs a
 dropped finder rebuilds it through ``sys.path_hooks`` from
 ``zipimport._zip_directory_cache``, which the trim leaves filled, so the
-rebuild reads no archive either. A freshly forked worker's first task
-still pays the cost once, because the invalidation runs before any
-engine code. That task's own late imports re-create the finders of the
-``sys.path`` roots searched before a module is found (3 with PySpark
-4.1), which its second task re-reads; later tasks re-read none.
+rebuild reads no archive either. The trim runs when a wrapped call
+starts and again when it ends (for a call that returns an iterator, when
+the iteration ends), so the finders a function's own imports re-create
+are gone before the worker's next task: a failed import, which walks
+all of ``sys.path``, re-creates those of ``pyspark.zip``, py4j's zip and
+the spark-core jar. A freshly forked worker's first task still pays the
+cost once, because the invalidation runs before any engine code.
+
+Each trim is skipped when no finder was added since the last one, so a
+per-row function (a scalar ``udf`` body, a UDTF ``eval``) scans the
+cache about once per task, not once per row. The check is O(1): the
+import system only appends to ``sys.path_importer_cache``, so a new
+finder changes its size or its last key. The record of the last trim
+lives in this module's globals, which ship by value with whatever the
+driver held, so it also names the cache object it saw (the driver's is
+not the worker's): each task's first call scans.
 
 ``worker_entry`` is the decorator that routes a function through the
 prologue. It wraps every function the engine hands to ``mapInPandas``,
@@ -48,6 +59,10 @@ import inspect
 import sys
 import zipimport
 
+#: (id, size, last key) of ``sys.path_importer_cache`` right after the
+#: last trim, None before the first
+_TRIMMED_AT = None
+
 
 def trim_zip_importers() -> None:
     """Drop every ``zipimporter`` from ``sys.path_importer_cache``;
@@ -59,10 +74,30 @@ def trim_zip_importers() -> None:
         del cache[path]
 
 
+def _cache_mark():
+    cache = sys.path_importer_cache
+    return id(cache), len(cache), next(reversed(cache), None)
+
+
+def _trim_if_added() -> None:
+    """Trim unless no finder was added since the last trim."""
+    global _TRIMMED_AT
+    if _cache_mark() != _TRIMMED_AT:
+        trim_zip_importers()
+        _TRIMMED_AT = _cache_mark()
+
+
+def _trim_when_done(it):
+    try:
+        yield from it
+    finally:
+        _trim_if_added()
+
+
 def worker_entry(fn):
     """Decorator for a function that runs on a Python worker: each call
-    trims the worker's zip importers first, and the function's module
-    ships by value with it.
+    trims the worker's zip importers before and after it runs, and the
+    function's module ships by value with it.
 
     The wrapper keeps ``fn``'s name, annotations and signature, so
     ``pandas_udf`` still infers its eval type from the type hints and
@@ -76,8 +111,12 @@ def worker_entry(fn):
 
     @functools.wraps(fn)
     def run(*args, **kwargs):
-        trim_zip_importers()
-        return fn(*args, **kwargs)
+        _trim_if_added()
+        out = fn(*args, **kwargs)
+        if hasattr(out, "__next__"):  # an iterator: trim when it ends
+            return _trim_when_done(out)
+        _trim_if_added()
+        return out
 
     run.__signature__ = inspect.signature(fn)
     return run

@@ -5,6 +5,8 @@ each is checked against its exact counterpart on the fixtures.
 
 from __future__ import annotations
 
+import os
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -15,8 +17,9 @@ from pyetl_spark.operators.minhash import (
     minhash_signature,
 )
 from pyetl_spark.operators.simhash import hamming64, simhash
+from pyetl_spark.parity import phash60
 from pyetl_spark.tables import load_tables
-from tests.conftest import SF_ORACLE
+from tests.conftest import SF_ORACLE, SF_SMOKE
 
 
 @pytest.fixture(scope="module")
@@ -306,8 +309,8 @@ def test_lsh_knn_recall_vs_bruteforce(spark, vec_frames):
 
 
 def test_simhash_df_equals_column_form(spark):
-    """The explode-based production simhash must equal the Column-fold
-    form exactly (same majority semantics)."""
+    """The Arrow-kernel simhash must equal the Column-fold form exactly
+    (same majority semantics)."""
     from pyetl_spark.operators.simhash import simhash_df
 
     df = spark.createDataFrame(
@@ -326,6 +329,121 @@ def test_simhash_df_equals_column_form(spark):
     }
     df_form = {r["doc_id"]: r["sh"] for r in simhash_df(df).collect()}
     assert col_form == df_form
+
+
+def _simhash_df_explode(docs, id_col="doc_id", tokens_col="tokens",
+                        hash_fn=None):
+    """Reference: the former ``simhash_df`` — explode to (id, token hash)
+    rows, one groupBy with a 65-field struct(count, 64 bit sums)
+    aggregate, then the 64-term majority fold."""
+    exploded = docs.select(
+        F.col(id_col).alias("_id"), F.explode(F.col(tokens_col)).alias("_t")
+    ).select("_id", (hash_fn or F.xxhash64)(F.col("_t")).alias("_h"))
+    counts = ", ".join(
+        f"sum(cast((_h & shiftleft(1L, {j})) != 0 as long)) AS _c{j}"
+        for j in range(64)
+    )
+    counted = exploded.groupBy("_id").agg(
+        F.expr(f"struct(count(1) AS _n, {counts})").alias("_s")
+    )
+    majority = " | ".join(
+        f"(CASE WHEN _s._c{j} * 2 > _s._n THEN shiftleft(1L, {j}) "
+        "ELSE 0L END)"
+        for j in range(64)
+    )
+    return counted.select(
+        F.col("_id").alias(id_col), F.expr(majority).alias("sh")
+    )
+
+
+_SF001 = os.path.join(os.path.dirname(SF_SMOKE), "sf0.01")
+
+_HASH_FNS = pytest.mark.parametrize(
+    "hash_fn", [None, phash60], ids=["xxhash64", "phash60"]
+)
+
+
+def _fingerprints(df):
+    rows = df.collect()
+    out = {r["doc_id"]: r["sh"] for r in rows}
+    assert len(out) == len(rows)
+    return out
+
+
+@_HASH_FNS
+@pytest.mark.parametrize("partitions", [1, 7])
+def test_simhash_df_equals_explode_reference(spark, hash_fn, partitions):
+    """Bit-identical to the former explode + struct-aggregate form on
+    the sf0.01 documents, read as 1 and as 7 partitions."""
+    from pyetl_spark.operators.simhash import simhash_df
+
+    d = load_tables(spark, _SF001).documents
+    docs = d.select(
+        "doc_id", F.array_distinct(F.split("text", " ")).alias("tokens")
+    ).repartition(partitions)
+    got = _fingerprints(simhash_df(docs, hash_fn=hash_fn))
+    want = _fingerprints(_simhash_df_explode(docs, hash_fn=hash_fn))
+    assert got == want
+    assert len(got) == d.count()
+
+
+@_HASH_FNS
+def test_simhash_df_edge_rows_match_explode_reference(spark, hash_fn):
+    """An empty and a null token array yield no fingerprint; a null
+    token hash counts toward n but sets no bit."""
+    from pyetl_spark.operators.simhash import simhash_df
+
+    df = spark.createDataFrame(
+        [
+            (1, ["alpha", "beta", "gamma"]),
+            (2, []),
+            (3, None),
+            (4, ["alpha", None, "beta"]),
+            (5, [None]),
+            (6, ["alpha", None]),
+        ],
+        "doc_id long, tokens array<string>",
+    )
+    # xxhash64 hashes a null token to its seed, phash60 to null: mask
+    # nulls so both cases carry null token hashes
+    fn = hash_fn or (
+        lambda c: F.when(c.isNotNull(), F.xxhash64(c))
+    )
+    got = _fingerprints(simhash_df(df, hash_fn=fn))
+    want = _fingerprints(_simhash_df_explode(df, hash_fn=fn))
+    assert got == want
+    assert set(got) == {1, 4, 5, 6}
+    assert got[5] == 0
+
+
+def test_simhash_df_plan_is_one_row_local_arrow_stage(spark):
+    """No Generate, Exchange or HashAggregate node; one MapInArrow."""
+    from pyetl_spark.operators.simhash import simhash_df
+
+    df = spark.createDataFrame(
+        [(1, ["a", "b"]), (2, ["c"])], "doc_id long, tokens array<string>"
+    )
+    plan = simhash_df(df)._jdf.queryExecution().executedPlan().toString()
+    for node in ("Generate", "Exchange", "HashAggregate"):
+        assert node not in plan, plan
+    assert plan.count("MapInArrow") == 1, plan
+
+
+def test_dedup_simhash_query_call_runs_one_job(spark):
+    """The query call's only job is hamming_band_pairs' eager
+    localCheckpoint of the fingerprints (two with a shuffle before it)."""
+    from pyetl_spark import registry
+
+    registry.load_all()
+    sc = spark.sparkContext
+    registry.QUERIES["dedup_simhash"](spark, SF_SMOKE)  # warm
+    sc.setJobGroup("dedup_simhash_build", "job-count pin")
+    try:
+        registry.QUERIES["dedup_simhash"](spark, SF_SMOKE)
+    finally:
+        sc._jsc.clearJobGroup()
+    jobs = sc.statusTracker().getJobIdsForGroup("dedup_simhash_build")
+    assert len(jobs) == 1, jobs
 
 
 def test_approx_percentile_accuracy(spark):

@@ -2,8 +2,12 @@
 
 - ``trim_zip_importers`` drops cached zip finders, keeps the others, and
   later imports from the zip still work without re-reading its directory.
+- ``worker_entry`` trims before and after each call (after the iteration
+  for a call that returns an iterator), and only when a finder was added
+  since the last trim.
 - In a real worker, once routed tasks have run, a task finds no zip
-  finder left for ``importlib.invalidate_caches()`` to re-read.
+  finder left for ``importlib.invalidate_caches()`` to re-read, also
+  after a task whose kernel failed an import (multimodal's PIL lookup).
 - Lint (fast lane): every function the engine hands to a Python worker
   goes through ``worker_entry``, and only ``pyworker`` registers modules
   for by-value pickling.
@@ -23,6 +27,7 @@ import zipimport
 import pandas as pd
 import pytest
 
+from pyetl_spark.operators import pyworker
 from pyetl_spark.operators.pyworker import trim_zip_importers, worker_entry
 
 _REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
@@ -99,21 +104,64 @@ def test_worker_entry_keeps_signature_and_hints():
     assert wrapped((1,), "x") == "x"
 
 
-def test_warm_worker_task_finds_no_zip_finder(spark):
+@pytest.mark.fast
+def test_trims_once_when_no_finder_is_added(tmp_path, monkeypatch):
+    """10,000 wrapped calls with no import between them trim at most
+    once; a finder added after them is trimmed by the next call's end,
+    and by a generator's end of iteration."""
+    trims = []
+    real_trim = pyworker.trim_zip_importers
+
+    def counting_trim():
+        trims.append(1)
+        real_trim()
+
+    monkeypatch.setattr(pyworker, "trim_zip_importers", counting_trim)
+    row = worker_entry(lambda x: x + 1)
+    assert sum(row(i) for i in range(10_000)) == 50_005_000
+    assert len(trims) <= 1
+
+    archive = str(tmp_path / "marker.zip")
+    with zipfile.ZipFile(archive, "w") as z:
+        z.writestr("zpw_marker.py", "")
+
+    def add_finder():
+        sys.path_importer_cache[archive] = zipimport.zipimporter(archive)
+
+    try:
+        trims.clear()
+        worker_entry(add_finder)()
+        assert len(trims) == 1 and archive not in sys.path_importer_cache
+
+        @worker_entry
+        def batches(n):
+            for i in range(n):
+                if i == 2:
+                    add_finder()
+                yield i
+
+        trims.clear()
+        out = batches(4)
+        assert len(trims) == 0
+        assert list(out) == [0, 1, 2, 3]
+        assert len(trims) == 1 and archive not in sys.path_importer_cache
+    finally:
+        sys.path_importer_cache.pop(archive, None)
+        zipimport._zip_directory_cache.pop(archive, None)
+
+
+def _finders_at_entry(spark, work=lambda: None) -> dict[int, list[int]]:
     """Twelve 1-task jobs (enough for one of the local daemon's idle
-    workers to serve three of them); each reports (pid, zip finders cached when its
-    function starts, i.e. what this task's ``invalidate_caches()``
-    re-read). A worker's first task re-reads them all. Its routed
-    function trims them, but the task's own later first-time imports
-    re-create the finders of the ``sys.path`` entries searched before
-    the module is found (pyspark.zip, py4j's zip and the spark-core jar
-    with PySpark 4.1), so the second task on that worker re-reads only
-    those; from the third task on it re-reads none."""
+    workers to serve two or three of them), each running ``work`` in a
+    routed function; per worker pid, the zip finders each of its tasks
+    found cached when its function started, i.e. what that task's
+    ``importlib.invalidate_caches()`` re-read."""
 
     @worker_entry
     def body(batches, n_at_entry):
         for _ in batches:
             pass
+        work()
         yield pd.DataFrame({"pid": [os.getpid()], "n": [n_at_entry]})
 
     def probe(batches):
@@ -124,17 +172,49 @@ def test_warm_worker_task_finds_no_zip_finder(spark):
         return body(batches, n)
 
     df = spark.range(4).repartition(1)
-    runs = [
-        tuple(df.mapInPandas(probe, "pid long, n long").collect()[0])
-        for _ in range(12)
-    ]
     counts: dict[int, list[int]] = {}
-    for pid, n in runs:
+    for _ in range(12):
+        pid, n = df.mapInPandas(probe, "pid long, n long").collect()[0]
         counts.setdefault(pid, []).append(n)
-    warm = [ns for ns in counts.values() if len(ns) >= 3]
-    assert warm, f"no Python worker ran three tasks: {runs}"
+    return counts
+
+
+def test_warm_worker_task_finds_no_zip_finder(spark):
+    """A worker's first task re-reads every finder: the invalidation
+    runs before any engine code. Its routed function trims them, and
+    trims again when its iteration ends, after the task's own
+    first-time imports re-created the finders of the ``sys.path``
+    entries searched before each module was found (pyspark.zip, py4j's
+    zip and the spark-core jar with PySpark 4.1); so from its second
+    task on the worker re-reads none."""
+    counts = _finders_at_entry(spark)
+    warm = [ns for ns in counts.values() if len(ns) >= 2]
+    assert warm, f"no Python worker ran two tasks: {counts}"
     for ns in warm:
-        assert ns[1] < max(ns[0], 1) and ns[2:] == [0] * len(ns[2:]), runs
+        assert ns[1:] == [0] * len(ns[1:]), counts
+
+
+def test_task_after_a_multimodal_task_finds_no_zip_finder(spark):
+    """Each task decodes a payload the way the multimodal kernels do.
+    ``multimodal`` ships by value, so every task repeats the failed
+    ``import PIL``, which walks ``sys.path`` and re-creates the zip
+    finders of its roots after the prologue's trim. The trim at the
+    end of the routed function's iteration drops them: every task
+    after a worker's first finds 0 zip finders at entry."""
+    from pyetl_spark.operators import multimodal
+    from pyetl_spark.operators.multimodal import _decode_image
+
+    media = multimodal.attach_fake_media(
+        spark.createDataFrame([(1, "a b")], "doc_id long, text string")
+    )
+    multimodal.extract_features(media).collect()  # ships multimodal by value
+    counts = _finders_at_entry(
+        spark, lambda: _decode_image(b"payload", True)
+    )
+    warm = [ns for ns in counts.values() if len(ns) >= 2]
+    assert warm, f"no Python worker ran two tasks: {counts}"
+    for ns in warm:
+        assert ns[1:] == [0] * len(ns[1:]), counts
 
 
 # ------------------------------------------------------------------ lint
