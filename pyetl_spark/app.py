@@ -13,8 +13,8 @@ streaming with identical transform code:
             quality_filter_transform(min_value=0.0),
         ],
         sinks=[
-            ParquetSink(path=..., partition_by="dt"),
-            JsonSink(path=...),
+            Sink(path=..., partition_by=("dt",)),
+            Sink(path=..., fmt="json"),
         ],
     )
     run_batch(spark, spec)          # one-shot backfill
@@ -22,7 +22,8 @@ streaming with identical transform code:
 
 Transforms are named DataFrame→DataFrame callables, so the SAME list runs
 in both modes — the property the reference lacked (its loop code was the
-only spec).
+only spec). Every multi-sink and per-batch write in the engine goes
+through one lander, ``land``.
 """
 
 from __future__ import annotations
@@ -33,6 +34,8 @@ from dataclasses import dataclass, field
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+
+from pyetl_spark.etl_metrics import observe_quality
 
 Transform = Callable[[DataFrame], DataFrame]
 
@@ -45,23 +48,22 @@ class JsonSource:
 
 
 @dataclass
-class ParquetSink:
-    path: str
-    partition_by: str | None = None
-    mode: str = "overwrite"
+class Sink:
+    """One destination: a path, a file format, Hive partition columns,
+    and an optional row transform that selects or shapes the rows this
+    sink receives (the corpus and quarantine sinks of one batch)."""
 
-
-@dataclass
-class JsonSink:
     path: str
-    mode: str = "overwrite"
+    fmt: str = "parquet"
+    partition_by: tuple[str, ...] = ()
+    rows: Transform | None = None
 
 
 @dataclass
 class PipelineSpec:
     source: JsonSource
     transforms: list[Transform] = field(default_factory=list)
-    sinks: list[ParquetSink | JsonSink] = field(default_factory=list)
+    sinks: list[Sink] = field(default_factory=list)
 
 
 # ---------------------------------------------------------------- transforms
@@ -112,37 +114,64 @@ def _apply(df: DataFrame, spec: PipelineSpec) -> DataFrame:
     return df
 
 
-def _write_batch_sinks(df: DataFrame, spec: PipelineSpec) -> None:
-    cached = df.cache()
+def land(
+    df: DataFrame, sinks: list[Sink], batch_id: int | None = None
+) -> int:
+    """Write ``df`` to every sink and return its row count.
+
+    - ``df`` is persisted when two or more sinks read it, so the source
+      is read and transformed once, and unpersisted afterwards.
+    - With ``batch_id``, each sink's rows are stamped with it as a
+      ``long`` column and land under ``batch_id=<id>`` (then the sink's
+      own partition columns) by dynamic partition overwrite: a batch
+      replayed after a crash replaces exactly its own output. foreachBatch
+      is at-least-once, so this is what makes every streaming sink
+      exactly-once across restarts. Without ``batch_id``, each sink is a
+      plain overwrite.
+    - The count comes from an ``observe`` on the first write, before any
+      row transform: no extra pass over the data. With no sinks nothing
+      is written, so nothing could be observed: 0.
+    """
+    if not sinks:
+        return 0
+    pinned = len(sinks) >= 2
+    if pinned:
+        df = df.persist()
     try:
-        for sink in spec.sinks:
-            if isinstance(sink, ParquetSink):
-                w = cached.write.mode(sink.mode)
-                if sink.partition_by:
-                    w = w.partitionBy(sink.partition_by)
-                w.parquet(sink.path)
-            elif isinstance(sink, JsonSink):
-                cached.write.mode(sink.mode).json(sink.path)
-            else:  # pragma: no cover
-                raise TypeError(f"unknown sink: {sink!r}")
+        observed, obs = observe_quality(df)
+        for i, sink in enumerate(sinks):
+            out = observed if i == 0 else df
+            if sink.rows is not None:
+                out = sink.rows(out)
+            parts = sink.partition_by
+            if batch_id is not None:
+                out = out.withColumn("batch_id", F.lit(batch_id).cast("long"))
+                parts = ("batch_id", *parts)
+            w = out.write.mode("overwrite").format(sink.fmt)
+            if batch_id is not None:
+                w = w.option("partitionOverwriteMode", "dynamic")
+            if parts:
+                w = w.partitionBy(*parts)
+            w.save(sink.path)
+        return int(obs.get["n_rows"])
     finally:
-        cached.unpersist()
+        if pinned:
+            df.unpersist()
 
 
 def run_batch(spark: SparkSession, spec: PipelineSpec) -> int:
-    """One-shot run: read → transforms → every sink. Returns rows landed."""
+    """One-shot run: read → transforms → every sink. Returns rows landed,
+    counted during the writes (the source is read once)."""
     df = spark.read.schema(spec.source.schema).json(spec.source.path)
-    out = _apply(df, spec)
-    _write_batch_sinks(out, spec)
-    return out.count()
+    return land(_apply(df, spec), spec.sinks)
 
 
 def run_streaming(
     spark: SparkSession, spec: PipelineSpec, checkpoint: str
 ):
-    """Incremental run: same transforms per micro-batch, foreachBatch
-    fan-out with batch_id idempotency (exactly-once with the checkpoint
-    WAL). Returns the started StreamingQuery."""
+    """Incremental run: same transforms per micro-batch, landed by
+    ``land`` with the batch_id overwrite rule (exactly-once with the
+    checkpoint WAL). Returns the started StreamingQuery."""
     reader = spark.readStream.schema(spec.source.schema)
     if spec.source.max_files_per_trigger is not None:
         reader = reader.option(
@@ -150,34 +179,11 @@ def run_streaming(
         )
     stream = reader.json(spec.source.path)
 
-    def land(batch_df: DataFrame, batch_id: int) -> None:
-        out = _apply(batch_df, spec).withColumn("batch_id", F.lit(batch_id))
-        for sink in spec.sinks:
-            if isinstance(sink, ParquetSink):
-                w = (
-                    out.write.mode("overwrite")
-                    .option("partitionOverwriteMode", "dynamic")
-                    .partitionBy(
-                        *(
-                            ["batch_id", sink.partition_by]
-                            if sink.partition_by
-                            else ["batch_id"]
-                        )
-                    )
-                )
-                w.parquet(sink.path)
-            elif isinstance(sink, JsonSink):
-                # dynamic partition overwrite here too — plain overwrite
-                # would wipe prior batches' partitions on every new batch
-                (
-                    out.write.mode("overwrite")
-                    .option("partitionOverwriteMode", "dynamic")
-                    .partitionBy("batch_id")
-                    .json(sink.path)
-                )
+    def land_batch(batch_df: DataFrame, batch_id: int) -> None:
+        land(_apply(batch_df, spec), spec.sinks, batch_id)
 
     return (
-        stream.writeStream.foreachBatch(land)
+        stream.writeStream.foreachBatch(land_batch)
         .option("checkpointLocation", checkpoint)
         .trigger(availableNow=True)
         .start()

@@ -20,6 +20,7 @@ import tempfile
 from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from pyetl_spark.app import Sink, land
 from pyetl_spark.parity import FXP, fxp
 from pyetl_spark.registry import query
 from pyetl_spark.tables import load_tables
@@ -89,29 +90,23 @@ def sink_multi(spark: SparkSession, sf_dir: str) -> DataFrame:
     returns the union of both read-backs tagged by sink (so row count =
     2× input proves both destinations committed).
 
-    Batch fan-out writes the input once per sink; the streaming version
-    (foreachBatch, Tier C) shares one materialization per micro-batch —
-    at scale, cache the input before fan-out to avoid recomputing the
-    upstream pipeline per destination.
+    Lands through ``app.land``, the lander every sink write shares: the
+    input is persisted once and read by both writes. The streaming twin
+    (``streaming/pipeline.foreach_batch_multi_sink``, Tier C) lands each
+    micro-batch through the same lander, so it too shares one
+    materialization per micro-batch.
     """
     pq_path = _scratch("multi_parquet")
     js_path = _scratch("multi_json")
     df = _events_enriched(spark, sf_dir)
-    cached = df.cache()
-    try:
-        cached.write.mode("overwrite").parquet(pq_path)
-        cached.write.mode("overwrite").json(js_path)
-        pq_back = spark.read.parquet(pq_path).withColumn(
-            "sink", F.lit("parquet")
-        )
-        js_back = (
-            spark.read.schema(df.schema)
-            .json(js_path)
-            .withColumn("sink", F.lit("json"))
-        )
-        return pq_back.unionByName(js_back).orderBy("sink", "event_id")
-    finally:
-        cached.unpersist()
+    land(df, [Sink(pq_path), Sink(js_path, fmt="json")])
+    pq_back = spark.read.parquet(pq_path).withColumn("sink", F.lit("parquet"))
+    js_back = (
+        spark.read.schema(df.schema)
+        .json(js_path)
+        .withColumn("sink", F.lit("json"))
+    )
+    return pq_back.unionByName(js_back).orderBy("sink", "event_id")
 
 
 #: Read-back-equality oracle for the lossless columnar sinks: the sink

@@ -39,6 +39,7 @@ from pyspark.sql.types import (
     TimestampType,
 )
 
+from pyetl_spark.app import Sink, land
 from pyetl_spark.operators import text as TX
 
 DOCS_STREAM_SCHEMA = StructType(
@@ -108,54 +109,28 @@ def write_corpus_batch(
     two sink writes (or after writing but before the checkpoint commit),
     the restarted query re-runs the SAME batch_id. Two blind appends
     would then duplicate accepted docs — in the exact pipeline whose job
-    is dedup. Fix: every batch lands in its own ``batch_id=<id>``
-    partition via DYNAMIC partition overwrite, so a replay of batch N
-    replaces exactly batch N's output and nothing else. Readers see
-    ``batch_id`` as an ordinary partition column.
+    is dedup. ``app.land`` lands each batch in its own ``batch_id=<id>``
+    partition by dynamic partition overwrite, so a replay of batch N
+    replaces exactly batch N's output and nothing else; the batch is
+    persisted once for both sinks. Readers see ``batch_id`` as an
+    ordinary partition column.
     """
-    batch_df.persist()
-    try:
-        (
-            batch_df.filter(F.col("reject_reason").isNull())
-            .drop("reject_reason")
-            .withColumn("batch_id", F.lit(batch_id).cast("long"))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("batch_id", "lang")
-            .parquet(corpus_path)
-        )
-        (
-            batch_df.filter(F.col("reject_reason").isNotNull())
-            .withColumn("batch_id", F.lit(batch_id).cast("long"))
-            .write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("batch_id")
-            .parquet(quarantine_path)
-        )
-    finally:
-        batch_df.unpersist()
-
-
-def corpus_multi_sink(
-    scored: DataFrame,
-    corpus_path: str,
-    quarantine_path: str,
-    checkpoint: str,
-):
-    """foreachBatch writer: accepted → corpus parquet (partitioned by
-    batch_id/lang), rejected → quarantine parquet with reason. One
-    streaming query (one checkpoint/epoch ledger) feeding both sinks;
-    per-batch dynamic partition overwrite (``write_corpus_batch``) makes
-    replayed batches idempotent, so the whole pipeline is effectively
-    exactly-once across restarts."""
-
-    def write_both(batch_df: DataFrame, batch_id: int) -> None:
-        write_corpus_batch(batch_df, batch_id, corpus_path, quarantine_path)
-
-    return (
-        scored.writeStream.foreachBatch(write_both)
-        .option("checkpointLocation", checkpoint)
-        .outputMode("append")
+    land(
+        batch_df,
+        [
+            Sink(
+                corpus_path,
+                partition_by=("lang",),
+                rows=lambda d: d.filter(
+                    F.col("reject_reason").isNull()
+                ).drop("reject_reason"),
+            ),
+            Sink(
+                quarantine_path,
+                rows=lambda d: d.filter(F.col("reject_reason").isNotNull()),
+            ),
+        ],
+        batch_id,
     )
 
 
@@ -182,11 +157,17 @@ def run_corpus_ingest(
         scored.filter(F.col("reject_reason").isNull()), watermark
     )
     rejected = scored.filter(F.col("reject_reason").isNotNull())
-    # one query per sink family keeps the dedup state only on the
-    # accepted branch; union back for the shared writer
+    # the dedup state stays on the accepted branch; union back so one
+    # query (one checkpoint) feeds both sinks of the shared writer
     merged = accepted.unionByName(rejected)
+
+    def write_both(batch_df: DataFrame, batch_id: int) -> None:
+        write_corpus_batch(batch_df, batch_id, corpus_path, quarantine_path)
+
     return (
-        corpus_multi_sink(merged, corpus_path, quarantine_path, checkpoint)
+        merged.writeStream.foreachBatch(write_both)
+        .option("checkpointLocation", checkpoint)
+        .outputMode("append")
         .trigger(availableNow=True)
         .start()
     )
@@ -225,13 +206,8 @@ def assign_neardup_batch(
         num_hashes=num_hashes,
         bands=bands,
         seed=seed,
-    ).withColumn("batch_id", F.lit(batch_id).cast("long"))
-    (
-        out.write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("batch_id")
-        .parquet(out_path)
     )
+    land(out, [Sink(out_path)], batch_id)
 
 
 def run_neardup_ingest(
@@ -323,14 +299,10 @@ def strip_boilerplate_batch(
     rewrites its own partition instead of appending duplicates."""
     from pyetl_spark.operators.text import strip_boilerplate
 
-    out = strip_boilerplate(batch_df, boiler, width=width).withColumn(
-        "batch_id", F.lit(batch_id).cast("long")
-    )
-    (
-        out.write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("batch_id")
-        .parquet(out_path)
+    land(
+        strip_boilerplate(batch_df, boiler, width=width),
+        [Sink(out_path)],
+        batch_id,
     )
 
 
@@ -468,14 +440,10 @@ def encode_vectors_batch(
         # two consumers (codes + drift MSE) and an n-count — pin the
         # residual frame so the nearest-centroid pass runs once
         res = res.localCheckpoint(eager=True)
-    delta = ivfpq_encode(res, codebook, m=m, dim=dim, k=k).withColumn(
-        "batch_id", F.lit(batch_id).cast("long")
-    )
-    (
-        delta.write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("batch_id")
-        .parquet(out_path)
+    land(
+        ivfpq_encode(res, codebook, m=m, dim=dim, k=k),
+        [Sink(out_path)],
+        batch_id,
     )
     if mse_log_path is not None:
         n = res.count()
@@ -487,15 +455,9 @@ def encode_vectors_batch(
             else None
         )
         rec = batch_df.sparkSession.createDataFrame(
-            [(int(batch_id), n, mse)],
-            "batch_id long, n_vectors long, batch_mse double",
+            [(n, mse)], "n_vectors long, batch_mse double"
         )
-        (
-            rec.write.mode("overwrite")
-            .option("partitionOverwriteMode", "dynamic")
-            .partitionBy("batch_id")
-            .parquet(mse_log_path)
-        )
+        land(rec, [Sink(mse_log_path)], batch_id)
 
 
 def latest_codes(

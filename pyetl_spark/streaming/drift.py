@@ -39,6 +39,8 @@ import os
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from pyetl_spark.app import Sink, land
+
 DEFAULT_BUCKETS = 20
 #: PSI conventional thresholds: <0.1 stable, 0.1-0.2 drifting, >0.2 act.
 PSI_ALERT = 0.2
@@ -124,15 +126,10 @@ def psi_foreach_batch(
             n_rows += r["c"]
         score = psi(ref_counts, cur)
         audit = spark.createDataFrame(
-            [(int(batch_id), int(n_rows), float(score), score > alert)],
-            "batch_id long, n_rows long, psi double, drift_alert boolean",
+            [(int(n_rows), float(score), score > alert)],
+            "n_rows long, psi double, drift_alert boolean",
         )
-        (
-            audit.write.mode("overwrite")
-            .partitionBy("batch_id")
-            .option("partitionOverwriteMode", "dynamic")
-            .parquet(ledger_path)
-        )
+        land(audit, [Sink(ledger_path)], batch_id)
 
     return _fn
 

@@ -24,6 +24,7 @@ from pyspark.sql.types import (
     TimestampType,
 )
 
+from pyetl_spark.app import Sink, land
 from pyetl_spark.operators.pyworker import worker_entry
 
 #: JSON-lines schema for file-fed event streams (ts as ISO-8601 string in
@@ -230,22 +231,16 @@ def foreach_batch_multi_sink(
     `stream_foreachbatch_multisink`) — the streaming version of the
     reference's signature multi-destination write.
 
-    Idempotency: each batch lands under ``batch_id=N`` partitions with
-    overwrite, so replays after failure rewrite the same paths instead of
-    duplicating — the engine-managed analog of the reference's temp-file +
-    atomic-rename dance.
+    Idempotency: ``app.land`` lands each batch under ``batch_id=N``
+    partitions by dynamic partition overwrite, so replays after failure
+    rewrite the same paths instead of duplicating — the engine-managed
+    analog of the reference's temp-file + atomic-rename dance. The batch
+    is persisted once and read by both sinks.
     """
+    sinks = [Sink(parquet_path), Sink(json_path, fmt="json")]
 
     def write_both(batch_df: DataFrame, batch_id: int) -> None:
-        batch = batch_df.withColumn("batch_id", F.lit(batch_id))
-        for fmt, path in (("parquet", parquet_path), ("json", json_path)):
-            (
-                batch.write.mode("overwrite")
-                .partitionBy("batch_id")
-                .option("partitionOverwriteMode", "dynamic")
-                .format(fmt)
-                .save(path)
-            )
+        land(batch_df, sinks, batch_id)
 
     return (
         stream.writeStream.foreachBatch(write_both)
@@ -447,7 +442,7 @@ def run_topk_trending(
         wnd = W.partitionBy("w").orderBy(
             F.desc("n_events"), F.asc("user_id")
         )
-        (
+        top = (
             batch_df.withColumn("rank", F.row_number().over(wnd))
             .filter(F.col("rank") <= k)
             .select(
@@ -456,12 +451,8 @@ def run_topk_trending(
                 "n_events",
                 "rank",
             )
-            .withColumn("batch_id", F.lit(batch_id))
-            .write.mode("overwrite")
-            .partitionBy("batch_id")
-            .option("partitionOverwriteMode", "dynamic")
-            .parquet(out_path)
         )
+        land(top, [Sink(out_path)], batch_id)
 
     return (
         agg.writeStream.foreachBatch(rank_and_write)

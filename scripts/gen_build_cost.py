@@ -10,7 +10,12 @@ update _BUILD_BASELINE_PATH in the lint to the new file in the same
 commit. Counting method mirrors the lint exactly (JavaMember.__call__ is
 the dominant round-trip path; field reads / GC traffic are noise-level).
 
-Usage: python scripts/gen_build_cost.py [--out build_cost_r12.jsonl]
+A key's count depends on what ran before it in the same process (warm
+schema and plan caches), so the baseline is always ALL keys in one run,
+in the lint's own order (sorted key names). ``--only`` is for probing a
+key, never for patching rows into the baseline.
+
+Usage: python scripts/gen_build_cost.py [--out build_cost_r21.jsonl]
            [--only key1,key2] [--sf /root/testdata/sf0.001]
 """
 
@@ -58,7 +63,7 @@ def main() -> int:
 
     spark = get_session("pyetl-spark-buildcost")
     registry.load_all()
-    keys = args.only.split(",") if args.only else list(registry.QUERIES)
+    keys = args.only.split(",") if args.only else sorted(registry.QUERIES)
     errors = 0
     with open(args.out, "w") as fh:
         for i, key in enumerate(keys, 1):

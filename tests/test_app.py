@@ -9,11 +9,11 @@ import os
 
 from pyspark.sql import functions as F
 
+from perfbench.tracing import group_counters
 from pyetl_spark.app import (
-    JsonSink,
     JsonSource,
-    ParquetSink,
     PipelineSpec,
+    Sink,
     enrich_time_transform,
     merge_upsert,
     parse_props_transform,
@@ -48,7 +48,7 @@ def _spec(src, pq, js):
             enrich_time_transform(),
             quality_filter_transform(min_value=0.0),
         ],
-        sinks=[ParquetSink(path=pq, partition_by="dt"), JsonSink(path=js)],
+        sinks=[Sink(pq, partition_by=("dt",)), Sink(js, fmt="json")],
     )
 
 
@@ -59,12 +59,24 @@ def _write(src, name, rows):
             f.write(json.dumps(r) + "\n")
 
 
+def _traffic_source(base, n=20_000, files=4):
+    """``n`` event rows in ``files`` JSON files; returns (dir, bytes)."""
+    src = os.path.join(base, "src")
+    rows = _rows(n)
+    per = n // files
+    for i in range(files):
+        _write(src, f"b{i}.json", rows[i * per:(i + 1) * per])
+    return src, sum(
+        os.path.getsize(os.path.join(src, f)) for f in os.listdir(src)
+    )
+
+
 def test_batch_pipeline_lands_both_sinks(spark, tmp_path):
     base = str(tmp_path)
     src, pq, js = (os.path.join(base, d) for d in ("src", "pq", "js"))
     _write(src, "b1.json", _rows(50))
     landed = run_batch(spark, _spec(src, pq, js))
-    assert landed == 40  # 10 negative-value rows filtered
+    assert landed == 40  # 10 negative-value rows filtered, count observed
     back = spark.read.parquet(pq)
     assert back.count() == 40
     assert {"k", "dt", "event_hour"} <= set(back.columns)
@@ -90,6 +102,40 @@ def test_streaming_pipeline_same_transforms(spark, tmp_path):
     # BOTH sinks must retain batch-0 rows after batch 1 (dynamic
     # partition overwrite; plain overwrite would wipe the json side)
     assert spark.read.json(js).count() == 40 + 4
+
+
+def test_batch_lander_reads_source_once(spark, tmp_path):
+    """Two sinks cost one read of the source: the lander persists the
+    transformed frame for the second write and counts the rows with an
+    observe on the first, so the runner issues exactly the two write
+    jobs. Cached-block reads count as input too, hence the 15 % slack."""
+    base = str(tmp_path)
+    src, src_bytes = _traffic_source(base)
+    spec = _spec(src, os.path.join(base, "pq"), os.path.join(base, "js"))
+    sc = spark.sparkContext
+    sc.setJobGroup("run_batch_traffic", "lander traffic pin")
+    try:
+        landed = run_batch(spark, spec)
+    finally:
+        sc._jsc.clearJobGroup()
+    c = group_counters(spark, "run_batch_traffic")
+    assert landed == 16_000
+    assert c["jobs"] == 2, c
+    assert c["input_bytes"] <= 1.15 * src_bytes, (c, src_bytes)
+
+
+def test_streaming_lander_reads_batch_once(spark, tmp_path):
+    """The streaming runner's micro-batch is read once for both sinks
+    (the same lander): two jobs, input within 15 % of the source."""
+    base = str(tmp_path)
+    src, src_bytes = _traffic_source(base)
+    spec = _spec(src, os.path.join(base, "pq"), os.path.join(base, "js"))
+    q = run_streaming(spark, spec, os.path.join(base, "ck"))
+    q.awaitTermination(120)
+    c = group_counters(spark, str(q.runId))
+    assert spark.read.parquet(os.path.join(base, "pq")).count() == 16_000
+    assert c["jobs"] == 2, c
+    assert c["input_bytes"] <= 1.15 * src_bytes, (c, src_bytes)
 
 
 def test_merge_upsert_updates_and_inserts(spark, tmp_path):

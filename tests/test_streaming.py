@@ -18,6 +18,7 @@ import pytest
 
 from pyspark.sql import functions as F
 
+from perfbench.tracing import group_counters
 from pyetl_spark.streaming import (
     dedup_within_watermark,
     foreach_batch_multi_sink,
@@ -245,6 +246,30 @@ def test_foreachbatch_multi_sink(spark, scratch):
     assert pq_back.count() == 25
     assert js_back.count() == 25
     assert "batch_id" in pq_back.columns
+
+
+def test_foreachbatch_multi_sink_reads_batch_once(spark, scratch):
+    """Both sinks share one materialization of the micro-batch (the
+    ``app.land`` persist): two write jobs, and input within 15 % of the
+    source bytes — cached-block reads are counted as input too."""
+    src = os.path.join(scratch, "src")
+    rows = [_row(i, h=9, m=i % 60) for i in range(20_000)]
+    for i in range(4):
+        _write_batch(src, f"b{i}.json", rows[i * 5_000:(i + 1) * 5_000])
+    src_bytes = sum(
+        os.path.getsize(os.path.join(src, f)) for f in os.listdir(src)
+    )
+    q = foreach_batch_multi_sink(
+        read_events_stream(spark, src),
+        os.path.join(scratch, "pq"),
+        os.path.join(scratch, "js"),
+        os.path.join(scratch, "ck"),
+    )
+    q.awaitTermination(120)
+    c = group_counters(spark, str(q.runId))
+    assert spark.read.parquet(os.path.join(scratch, "pq")).count() == 20_000
+    assert c["jobs"] == 2, c
+    assert c["input_bytes"] <= 1.15 * src_bytes, (c, src_bytes)
 
 
 def test_sliding_window_stream(spark, scratch):
