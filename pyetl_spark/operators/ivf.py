@@ -20,8 +20,10 @@ actually lives in. Pipeline:
 3. ``ivf_topk``: probe → nearest ``nprobe`` cells → exact cosine re-rank
    within the union of those cells only.
 
-Scale: the k centroids (k×dim doubles) ship inside the plan or the task
-closure; assignment is a stateless projection, no join. A Lloyd
+Scale: the k centroids (k×dim doubles) ship in the nearest-centroid
+kernel's closure; assignment is a stateless projection, no join. Fits
+hand their centroids to consumers as a driver-resident LocalRelation
+(``localize_rows``, capped at ``MAX_LOCAL_CELLS``). A Lloyd
 iteration moves one k×dim partial per partition and no corpus rows.
 Search touches |corpus| × nprobe / k vectors in expectation instead of
 the full corpus. The Arrow kernels and the RDD fold are
@@ -49,86 +51,58 @@ def _sq_dist(a, b):
     )
 
 
-_NONFINITE_SQL = {"nan": "NaN", "inf": "Infinity", "-inf": "-Infinity"}
-
-
-def sql_double(v: float) -> str:
-    """Exact Spark SQL literal for a double: finite values as
-    ``repr(v) + "D"`` (shortest round-trip form, parsed back correctly
-    rounded), NaN/±Inf as ``CAST('NaN'|'Infinity'|'-Infinity' AS
-    DOUBLE)`` — ``repr`` spells those ``nan``/``inf``, which Spark would
-    read as column names."""
-    r = repr(float(v))
-    special = _NONFINITE_SQL.get(r)
-    return f"CAST('{special}' AS DOUBLE)" if special else r + "D"
+#: Most cells (Σ over rows of one per scalar, one per array element)
+#: ``localize_rows`` holds on the driver: 2^22 doubles, 32 MiB; semdedup's
+#: k = n/250 passes 10^4 rows at n ≈ 2.5 M and this cap at n ≈ 16 M (dim 64).
+MAX_LOCAL_CELLS = 1 << 22
 
 
 def localize_rows(spark, rows, schema) -> DataFrame:
     """Rebuild already-collected rows of a BOUNDED frame (index state:
-    centroids, codebooks — never corpus-scale) as a SQL ``VALUES``
-    literal, i.e. a true LocalRelation.
+    centroids, codebooks — never corpus-scale) as a driver-resident
+    LocalRelation built from one ``pyarrow.Table``.
 
-    Why not ``createDataFrame(rows)``: PySpark parallelizes that into an
-    RDD, so every downstream collect/broadcast still schedules a (tiny)
-    job per consumer. A VALUES LocalRelation is driver-resident — a
-    collect over it is ``executeCollect`` with NO job, and a broadcast
-    builds straight from the local rows. Values are bit-identical:
-    doubles round-trip through ``sql_double`` (shortest ``repr`` form and
-    Spark's correctly-rounded literal parser; NaN/±Inf as casts); the
-    final SELECT casts every column back to ``schema``.
+    Why not ``createDataFrame(rows)``: PySpark parallelizes a list into
+    an RDD, so every downstream collect/broadcast still schedules a
+    (tiny) job per consumer. A ``pyarrow.Table`` becomes a LocalRelation
+    whatever the session's Arrow conf: a collect over it runs NO job, and
+    a broadcast builds straight from the local rows. Arrow carries the
+    doubles' bits, so -0.0, NaN, ±Inf and subnormals round-trip exactly
+    (unlike the pandas route, which turns NaN inside arrays into NULL).
 
-    Supports the types index state uses (int/long, double, arrays of
-    them, None); raises on anything else rather than silently coercing.
     ``rows`` items may be Rows, tuples, or anything that iterates its
-    column values in ``schema`` field order. The SQL text is
-    O(rows × cells) — the same driver-bounded envelope as
-    ``_nearest_cell``'s literal/ndarray shipping, fine for the ≤10^4-row
-    centroid/codebook frames this serves; don't point it at anything
-    corpus-scale.
-    """
+    column values in ``schema`` field order. Raises ValueError above
+    ``MAX_LOCAL_CELLS``, before building anything: the driver holds
+    every cell."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
 
-    def lit(v) -> str:
-        if v is None:
-            return "NULL"
-        if isinstance(v, bool):
-            raise TypeError("localize_rows: bool column unsupported")
-        if isinstance(v, int):
-            return f"{v}L"
-        if isinstance(v, float):
-            return sql_double(v)
-        if isinstance(v, (list, tuple)):
-            return "array(" + ", ".join(lit(x) for x in v) + ")"
-        raise TypeError(f"localize_rows: unsupported cell {type(v)}")
-
-    if not rows:
-        return spark.createDataFrame([], schema)
-    vals = ", ".join(
-        "(" + ", ".join(lit(v) for v in row) + ")" for row in rows
+    cols = list(zip(*rows)) or [()] * len(schema.fields)
+    cells = sum(
+        len(v) if isinstance(v, (list, tuple)) else 1
+        for col in cols for v in col
     )
-    cols = ", ".join(
-        f"CAST(col{i + 1} AS {f.dataType.simpleString()}) AS "
-        f"`{f.name.replace('`', '``')}`"
-        for i, f in enumerate(schema.fields)
+    if cells > MAX_LOCAL_CELLS:
+        raise ValueError(
+            f"localize_rows: {len(rows)} rows hold {cells} cells, past "
+            f"MAX_LOCAL_CELLS={MAX_LOCAL_CELLS}; index state this large "
+            f"does not belong on the driver"
+        )
+    arrow = to_arrow_schema(schema)
+    table = pa.Table.from_arrays(
+        [pa.array(c, type=f.type) for c, f in zip(cols, arrow)],
+        schema=arrow,
     )
-    return spark.sql(f"SELECT {cols} FROM VALUES {vals}")
-
-
-#: Above this k, nearest-centroid assignment switches from the inlined
-#: JVM expression to the Arrow kernel: higher-order array functions
-#: evaluate their lambda per ELEMENT (interpreted, boxed), so the
-#: expression path costs ~n·k·dim lambda calls — fine for a bounded
-#: centroid table, pathological once k scales with the corpus
-#: (semdedup's k ∝ n contract; measured: 310 s vs 40 s at sf3).
-_KERNEL_MIN_K = 17
+    return spark.createDataFrame(table, schema)
 
 
 def _nearest_rows(E: np.ndarray, C: np.ndarray):
     """(hit, dist) of each row of E (n×dim) against the centroids C
     (k×dim, ordered by cell) — the numpy arithmetic every Arrow kernel
     here shares. Distances accumulate over the DIMENSION axis in
-    ascending order (the zip_with/aggregate fold's IEEE add sequence,
-    starting from 0.0), and argmin takes the FIRST minimum, i.e. the
-    lowest cell — the (dist, cell) struct min of the JVM form."""
+    ascending order starting from 0.0 (the IEEE add sequence of a SQL
+    ``aggregate(zip_with(...))`` fold, which the DuckDB oracles replay),
+    and argmin takes the FIRST minimum, i.e. the lowest cell."""
     d = np.zeros((E.shape[0], C.shape[0]), dtype=np.float64)
     for j in range(C.shape[1]):
         diff = E[:, j, None] - C[None, :, j]
@@ -145,8 +119,8 @@ def _vectors(v: pd.Series) -> np.ndarray:
 def _centroid_matrix(rows):
     """(cells, C) from centroid rows sorted by cell; raises on none."""
     if not rows:
-        # Fail loudly: an empty literal / np.stack([]) downstream would
-        # crash with an opaque error instead (ADVICE r5 low item).
+        # Fail loudly: np.stack([]) downstream would crash with an
+        # opaque error instead (ADVICE r5 low item).
         raise ValueError(
             "_nearest_cell: centroids DataFrame is empty — k-means over an "
             "empty corpus produces no cells to assign to"
@@ -160,46 +134,20 @@ def _nearest_structs(books, vec_col: str) -> list:
     """One struct Column (fields ``cell``, ``dist``) per subspace: the
     codeword of ``books[j]`` — a ``(cells, C)`` pair, C ordered by cell —
     nearest to slice j of ``vec_col`` (the whole vector when there is
-    one subspace, as in IVF). No shuffle, no join, at any k: the codebooks are the
-    bounded driver state an index IS, shipped into one stateless
-    projection. Two physical forms with BIT-IDENTICAL results, picked by
-    the largest codebook:
+    one subspace, as in IVF). Each is one Arrow-batched numpy kernel
+    (``_nearest_rows``) whose closure carries its codebook: no shuffle,
+    no join, at any k — the codebooks are the bounded driver state an
+    index IS, shipped into one stateless projection.
 
-    - k < _KERNEL_MIN_K: ONE ``F.expr`` string per subspace — cell ids,
-      centroids (via ``sql_double``) and the whole
-      ``array_min(zip_with(…))`` distance — so the plan stays
-      Python-free and its build costs a handful of Py4J calls at any
-      k×dim, not one per coordinate. Lambda variables carry a leading
-      underscore so they cannot shadow the vector column.
-    - k ≥ _KERNEL_MIN_K: one Arrow-batched numpy kernel per subspace
-      (``_nearest_rows``). Its distance loop is the expression's IEEE
-      add sequence, and argmin's first-minimum tie-break equals the
-      struct form's lexicographic (dist, cell) min because cells are
-      sorted ascending. Vectorized C replaces per-element interpreted
-      lambdas.
-
-    Both forms replace the original crossJoin(broadcast) + window-rank —
-    an n×k-row sort keyed on embedding arrays that the r5 sf0.1→1→3
-    scaling curve caught dominating the operator once k grew."""
-    d = books[0][1].shape[1]
-    if max(len(cells) for cells, _ in books) < _KERNEL_MIN_K:
-        x = "`" + vec_col.replace("`", "``") + "`"
-        out = []
-        for j, (cells, C) in enumerate(books):
-            xs = x if len(books) == 1 else f"slice({x}, {j * d + 1}, {d})"
-            cents = ", ".join(
-                "array(" + ", ".join(sql_double(v) for v in c) + ")"
-                for c in C
-            )
-            ids = ", ".join(str(c) for c in cells)
-            out.append(F.expr(
-                f"array_min(zip_with(array({cents}), array({ids}), "
-                f"(_cv, _cid) -> struct(aggregate(zip_with({xs}, _cv, "
-                f"(_x, _y) -> (_x - _y) * (_x - _y)), 0.0D, "
-                f"(_acc, _t) -> _acc + _t) AS dist, _cid AS cell)))"
-            ))
-        return out
+    Vectorized numpy beats the per-element interpreted lambdas of a
+    ``zip_with``/``aggregate`` expression at every k measured, from k=8
+    up to semdedup's k ∝ n (310 s vs 40 s at sf3). It replaced the
+    original crossJoin(broadcast) + window-rank — an n×k-row sort keyed
+    on embedding arrays that the r5 sf0.1→1→3 scaling curve caught
+    dominating the operator once k grew."""
     from pyspark.sql.functions import pandas_udf
+
+    d = books[0][1].shape[1]
 
     def kernel(cells, C, lo):
         @pandas_udf("cell int, dist double")
@@ -224,9 +172,9 @@ def _nearest_cell(vec_df: DataFrame, centroids, vec_col: str):
     driver (k×dim doubles), or already-collected rows.
 
     Two projections, not one: the second only reads fields of the
-    first's struct, so the distance is evaluated once. ``cell`` is
-    non-nullable (the fallback never fires: the centroid array is a
-    non-empty literal), so a join on it infers no ``isnotnull`` filter —
+    first's struct, so the kernel runs once. ``cell`` is non-nullable
+    (the fallback never fires: the kernel emits a cell for every row of
+    a non-empty codebook), so a join on it infers no ``isnotnull`` filter —
     that filter would be pushed below the projection and run the whole
     assignment a second time."""
     if isinstance(centroids, DataFrame):
@@ -465,10 +413,9 @@ def kmeans_fit_exact(
       order-free under any partitioning, unlike float sums; centroids
       are quantized to ``scale`` precision between iterations
       (immaterial for clustering quality at 1e-4 of the data range);
-    - assignment is ``_nearest_rows``' numpy kernel, bit-identical to
-      ``_nearest_cell``'s JVM expression: the same ascending-dimension
-      add sequence a SQL oracle replays verbatim, the same lowest-cell
-      tie-break;
+    - assignment is ``_nearest_rows``' numpy kernel, the one
+      ``_nearest_cell`` runs: an ascending-dimension add sequence a SQL
+      oracle replays verbatim, and a lowest-cell tie-break;
     - empty cells drop out (a cell no vector chose has no mean), so the
       returned cell ids may have gaps; an empty corpus raises."""
     from pyspark.sql.types import StructType
@@ -490,7 +437,7 @@ def kmeans_fit_exact(
     # would re-execute the final Lloyd step in every consumer:
     # ivf_assign collects it, ivf_topk and ivfpq_residuals/ivfpq_topk
     # each broadcast it. The loop above already holds the final rows on
-    # the driver (each step ran exactly once); the VALUES LocalRelation
+    # the driver (each step ran exactly once); the Arrow LocalRelation
     # makes every downstream collect driver-local (no job) and every
     # broadcast job-free (an eager localCheckpoint was A/B'd first and
     # LOST on single-consumer fits — text_semdedup +0.5 s, 3/3 pairs —

@@ -20,10 +20,9 @@ Scale-first design decisions:
 - Seeding is phash60-spread per subspace (replayable, rand()-free, the
   same md5 hash on DuckDB): one SQL aggregate whose ≤ m·k rows the
   driver relabels.
-- Encoding is a narrow projection through ivf's nearest-centroid code
-  (``ivf._nearest_structs``: a JVM expression per subspace below
-  ``ivf._KERNEL_MIN_K`` codewords, the Arrow kernel above) — no join,
-  no shuffle.
+- Encoding is a narrow projection through ivf's nearest-centroid
+  numpy kernel (``ivf._nearest_structs``, one Arrow kernel per
+  subspace) — no join, no shuffle.
 - Codes stay in LONG format (id, sub, code) — the layout every
   downstream join wants; array assembly is a display concern.
 - ADC is joins + one aggregation: probe×codebook table (m·k rows per

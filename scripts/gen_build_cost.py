@@ -15,7 +15,7 @@ schema and plan caches), so the baseline is always ALL keys in one run,
 in the lint's own order (sorted key names). ``--only`` is for probing a
 key, never for patching rows into the baseline.
 
-Usage: python scripts/gen_build_cost.py [--out build_cost_r21.jsonl]
+Usage: python scripts/gen_build_cost.py [--out build_cost_r22.jsonl]
            [--only key1,key2] [--sf /root/testdata/sf0.001]
 """
 

@@ -143,31 +143,83 @@ def test_persisted_index_matches_in_memory_path(spark):
                     round(r["sim"], 9)) for r in per])
 
 
-def test_nearest_cell_jvm_and_arrow_paths_bit_identical(spark, corpus):
-    """_nearest_cell has two physical forms (inlined JVM expression below
-    _KERNEL_MIN_K, Arrow numpy kernel above) that must be BIT-identical:
-    the kernel accumulates over the dimension axis in the same order as
-    the zip_with/aggregate expression and argmin's first-min tie-break
-    equals the (dist, cell) struct min. Force both paths over the SAME
-    k=20 centroids and compare every (id, cell, dist) exactly."""
-    import pyetl_spark.operators.ivf as ivf
+def _sql_double(v: float) -> str:
+    """Exact Spark SQL literal for a double: finite values as
+    ``repr(v) + "D"`` (shortest round-trip form, parsed back correctly
+    rounded), NaN/±Inf as casts — ``repr`` spells those as identifiers."""
+    r = repr(float(v))
+    special = {"nan": "NaN", "inf": "Infinity", "-inf": "-Infinity"}.get(r)
+    return f"CAST('{special}' AS DOUBLE)" if special else r + "D"
 
-    cents = ivf.kmeans_fit_exact(corpus, k=20, iters=1)
-    old = ivf._KERNEL_MIN_K
-    try:
-        ivf._KERNEL_MIN_K = 10_000  # force JVM expression path
-        jvm = {
-            r["vec_id"]: (r["cell"], r["dist"])
-            for r in ivf._nearest_cell(corpus, cents, "e").collect()
-        }
-        ivf._KERNEL_MIN_K = 1  # force Arrow kernel path
-        ker = {
-            r["vec_id"]: (r["cell"], r["dist"])
-            for r in ivf._nearest_cell(corpus, cents, "e").collect()
-        }
-    finally:
-        ivf._KERNEL_MIN_K = old
-    assert jvm == ker  # exact: same cells AND the same double bits
+
+def _nearest_structs_expression_reference(books, vec_col):
+    """The JVM form ``ivf._nearest_structs`` ran below 17 codewords before
+    the numpy kernel took every k, kept as the reference the kernel must
+    reproduce bit for bit: per subspace ONE ``F.expr`` whose
+    ``aggregate(zip_with(…))`` adds the squared differences in ascending
+    dimension order from 0.0, and whose ``array_min`` over
+    ``struct(dist, cell)`` breaks ties to the lowest cell."""
+    d = books[0][1].shape[1]
+    x = "`" + vec_col.replace("`", "``") + "`"
+    out = []
+    for j, (cells, C) in enumerate(books):
+        xs = x if len(books) == 1 else f"slice({x}, {j * d + 1}, {d})"
+        cents = ", ".join(
+            "array(" + ", ".join(_sql_double(v) for v in c) + ")" for c in C
+        )
+        ids = ", ".join(str(c) for c in cells)
+        out.append(F.expr(
+            f"array_min(zip_with(array({cents}), array({ids}), "
+            f"(_cv, _cid) -> struct(aggregate(zip_with({xs}, _cv, "
+            f"(_x, _y) -> (_x - _y) * (_x - _y)), 0.0D, "
+            f"(_acc, _t) -> _acc + _t) AS dist, _cid AS cell)))"
+        ))
+    return out
+
+
+def _nearest_bits(df, id_col, structs):
+    """{id: ((cell, dist.hex()), …)} — one pair per struct column."""
+    rows = df.select(
+        id_col, *[s.alias(f"_b{j}") for j, s in enumerate(structs)]
+    ).collect()
+    return {
+        r[id_col]: tuple(
+            (r[f"_b{j}"]["cell"], r[f"_b{j}"]["dist"].hex())
+            for j in range(len(structs))
+        )
+        for r in rows
+    }
+
+
+def test_nearest_cell_jvm_and_arrow_paths_bit_identical(spark, corpus):
+    """The numpy kernel behind every nearest-centroid assignment must be
+    BIT-identical to the JVM expression it replaced (kept above as the
+    reference): same ascending-dimension add sequence, and argmin's
+    first-minimum tie-break equals the (dist, cell) struct min. Checked
+    on exact (cell, dist) bits at k = 8, 16 and 20, and on a PQ codebook
+    where each of m = 4 subspaces reads a slice of the vector."""
+    import pyetl_spark.operators.ivf as ivf
+    from pyetl_spark.operators.pq import pq_fit_exact
+
+    cases = []
+    for k in (8, 16, 20):
+        rows = sorted(
+            ivf.kmeans_fit_exact(corpus, k=k, iters=1).collect(),
+            key=lambda r: r["cell"],
+        )
+        cases.append((k, [ivf._centroid_matrix(rows)]))
+    cb = pq_fit_exact(corpus, vec_col="e", m=4, k=8, dim=64, iters=1)
+    cb = sorted(cb.collect(), key=lambda r: (r["sub"], r["cell"]))
+    cases.append(("pq", [
+        ivf._centroid_matrix([r for r in cb if r["sub"] == j])
+        for j in range(4)
+    ]))
+    for case, books in cases:
+        ker = ivf._nearest_structs(books, "e")
+        ref = _nearest_structs_expression_reference(books, "e")
+        assert _nearest_bits(corpus, "vec_id", ker) == _nearest_bits(
+            corpus, "vec_id", ref
+        ), case
 
 
 def test_empty_centroids_fail_loudly(spark, corpus):
@@ -178,76 +230,108 @@ def test_empty_centroids_fail_loudly(spark, corpus):
         ivf_assign(corpus, empty)
 
 
+def _jobs_run(spark, fn):
+    """(fn(), number of Spark jobs it ran)."""
+    st = spark.sparkContext.statusTracker()
+    before = len(st.getJobIdsForGroup() or [])
+    out = fn()
+    return out, len(st.getJobIdsForGroup() or []) - before
+
+
 def test_localize_rows_exact_roundtrip_and_no_jobs(spark):
-    """localize_rows (r16) rebuilds bounded index state as a VALUES
-    LocalRelation: values/types must round-trip EXACTLY (doubles via
-    repr + correctly-rounded literal parsing, incl. subnormal-ish and
-    scientific-notation magnitudes; NaN/±Inf via sql_double's casts,
-    which bare repr would spell as the identifiers nan/inf), and
-    collecting the result must schedule no Spark job (the whole point
-    vs createDataFrame)."""
-    from pyspark.sql.types import (
-        ArrayType,
-        DoubleType,
-        IntegerType,
-        StructField,
-        StructType,
-    )
+    """localize_rows rebuilds bounded index state as an Arrow-built
+    LocalRelation: values/types must round-trip EXACTLY — -0.0,
+    subnormals, scientific-notation magnitudes, NaN/±Inf inside arrays
+    (the pandas route would turn that NaN into NULL) — and collecting the
+    result must schedule no Spark job (the point vs a parallelized
+    createDataFrame), with the session's Arrow conf on or off."""
+    from pyspark.sql.types import StructType
 
     from pyetl_spark.operators.ivf import localize_rows
 
-    schema = StructType(
-        [
-            StructField("cell", IntegerType()),
-            StructField("centroid", ArrayType(DoubleType())),
-        ]
-    )
+    schema = StructType.fromDDL("cell int, centroid array<double>")
     vals = [
-        (0, [0.1, -0.0, 1e-17, 123456.789]),
+        (0, [0.1, -0.0, 1e-17, 123456.789, 5e-324]),
         (1, [float.fromhex("0x1.fffffffffffffp+1"), -2.5e300, 0.0]),
         (2, None),
         (3, [float("nan"), float("inf"), float("-inf"), -0.0]),
     ]
-    df = localize_rows(spark, vals, schema)
-    assert [str(f.dataType) for f in df.schema.fields] == [
-        str(f.dataType) for f in schema.fields
-    ]
-    st = spark.sparkContext.statusTracker()
-    before = len(st.getJobIdsForGroup() or [])
-    got = sorted(df.collect(), key=lambda r: r["cell"])
-    after = len(st.getJobIdsForGroup() or [])
-    assert after == before, "collect over a VALUES LocalRelation ran a job"
-    for (cell, cent), row in zip(vals, got):
-        assert row["cell"] == cell
-        if cent is None:
-            assert row["centroid"] is None
-        else:
-            # exact bit identity, not approx
-            assert [x.hex() for x in row["centroid"]] == [
-                x.hex() for x in cent
-            ]
+    conf = "spark.sql.execution.arrow.pyspark.enabled"
+    old = spark.conf.get(conf)
+    try:
+        for arrow in ("true", "false"):
+            spark.conf.set(conf, arrow)
+            df = localize_rows(spark, vals, schema)
+            assert df.schema == schema
+            assert df._jdf.queryExecution().optimizedPlan().toString() \
+                .startswith("LocalRelation")
+            got, jobs = _jobs_run(spark, df.collect)
+            assert jobs == 0, "collect over a LocalRelation ran a job"
+            got = sorted(got, key=lambda r: r["cell"])
+            for (cell, cent), row in zip(vals, got):
+                assert row["cell"] == cell
+                if cent is None:
+                    assert row["centroid"] is None
+                else:
+                    # exact bit identity, not approx
+                    assert [x.hex() for x in row["centroid"]] == [
+                        x.hex() for x in cent
+                    ]
+    finally:
+        spark.conf.set(conf, old)
 
 
-def test_localize_rows_empty_and_unsupported(spark):
-    from pyspark.sql.types import (
-        IntegerType,
-        StringType,
-        StructField,
-        StructType,
-    )
-
-    import pytest as _pytest
+def test_localize_rows_empty_and_string_roundtrip(spark):
+    from pyspark.sql.types import StructType
 
     from pyetl_spark.operators.ivf import localize_rows
 
-    schema = StructType([StructField("cell", IntegerType())])
-    assert localize_rows(spark, [], schema).count() == 0
-    with _pytest.raises(TypeError):
-        localize_rows(
-            spark,
-            [("s",)],
-            StructType([StructField("x", StringType())]),
-        )
+    empty = localize_rows(spark, [], StructType.fromDDL("cell int"))
+    assert empty.schema == StructType.fromDDL("cell int")
+    assert _jobs_run(spark, empty.collect) == ([], 0)
+    schema = StructType.fromDDL("x string, n bigint")
+    got = localize_rows(spark, [("s", 1), (None, None)], schema).collect()
+    assert [tuple(r) for r in got] == [("s", 1), (None, None)]
+
+
+def test_localize_rows_large_state_builds_fast_without_jobs(spark):
+    """k=16,384 centroids × 64 dims (the state the old SQL VALUES literal
+    took ~90 s to build) localize in well under 5 s, as a LocalRelation
+    whose collect runs no job."""
+    import time
+
+    import numpy as np
+    from pyspark.sql.types import StructType
+
+    from pyetl_spark.operators.ivf import localize_rows
+
+    rng = np.random.default_rng(0)
+    rows = [(i, c.tolist()) for i, c in enumerate(rng.random((16_384, 64)))]
+    schema = StructType.fromDDL("cell int, centroid array<double>")
+    t0 = time.perf_counter()
+    df = localize_rows(spark, rows, schema)
+    assert time.perf_counter() - t0 < 5.0
+    assert df._jdf.queryExecution().optimizedPlan().toString() \
+        .startswith("LocalRelation")
+    got, jobs = _jobs_run(spark, df.collect)
+    assert jobs == 0 and len(got) == 16_384
+    assert got[16_383]["centroid"] == rows[16_383][1]
+
+
+def test_localize_rows_caps_driver_state(spark, monkeypatch):
+    """Past MAX_LOCAL_CELLS (rows × their array cells) localize_rows
+    raises before building anything, instead of growing driver state
+    with the corpus."""
+    import pyetl_spark.operators.ivf as ivf
+    from pyspark.sql.types import StructType
+
+    schema = StructType.fromDDL("cell int, centroid array<double>")
+    rows = [(i, [0.0] * 4) for i in range(3)]  # 3 × (1 + 4) = 15 cells
+    monkeypatch.setattr(ivf, "MAX_LOCAL_CELLS", 15)
+    assert ivf.localize_rows(spark, rows, schema).count() == 3
+    monkeypatch.setattr(ivf, "MAX_LOCAL_CELLS", 14)
+    with pytest.raises(ValueError, match="MAX_LOCAL_CELLS"):
+        ivf.localize_rows(spark, rows, schema)
 
 
 def _kmeans_fit_exact_sql_reference(corpus, k, iters, scale):
@@ -276,7 +360,10 @@ def _kmeans_fit_exact_sql_reference(corpus, k, iters, scale):
         )
     ]
     for _ in range(iters):
-        assigned = ivf._nearest_cell(corpus.select("vec_id", "e"), rows, "e")
+        (best,) = _nearest_structs_expression_reference(
+            [ivf._centroid_matrix(rows)], "e"
+        )
+        assigned = corpus.select("e", best["cell"].alias("cell"))
         terms = ", ".join(
             f"(cast(sum(cast(signum(e[{j}]) * "
             f"floor(abs(e[{j}]) * {float(scale)}D + 0.5D) as bigint))"
@@ -297,8 +384,8 @@ def test_kmeans_fit_exact_kernel_matches_sql_reference(
 ):
     """The Arrow-kernel Lloyd step (numpy assignment + int64 fixed-point
     partials + treeReduce + driver descale) must give exactly the
-    centroids of the SQL-aggregate loop it replaced, at k on both sides
-    of _KERNEL_MIN_K and for any partitioning of the input."""
+    centroids of the SQL-aggregate loop it replaced, at k = 3, 8 and 20
+    and for any partitioning of the input."""
     from pyetl_spark.operators.ivf import KMEANS_SCALE, kmeans_fit_exact
 
     split = (
@@ -368,13 +455,8 @@ def test_ivf_assign_join_on_cell_assigns_once(spark, corpus, k):
     """ivf_assign's ``cell`` is non-nullable, so joining it on ``cell``
     infers no isnotnull filter: that filter was pushed below the
     projection and evaluated the whole nearest-cell assignment a second
-    time — an extra distance expression below _KERNEL_MIN_K, a second
-    ArrowEvalPython (numpy kernel run) above it."""
-    import pyetl_spark.operators.ivf as ivf
-
+    time — a second ArrowEvalPython (numpy kernel run) in the plan."""
     cents = kmeans_fit_exact(corpus, k=k, iters=1)
-    assert (len(cents.collect()) >= ivf._KERNEL_MIN_K) == (k == 20)
     joined = ivf_assign(corpus, cents).join(cents, "cell")
     plan = joined._jdf.queryExecution().executedPlan().toString()
-    assert "isnotnull(array_min" not in plan, plan
-    assert plan.count("ArrowEvalPython") == (1 if k == 20 else 0), plan
+    assert plan.count("ArrowEvalPython") == 1, plan

@@ -748,13 +748,33 @@ _PYTHON_EVAL_OK = {
     "pipeline_curation_full",  # composes the pandas-backed stages above
     "dedup_simhash",           # 64 bit-majorities per row in one Arrow
                                # kernel, behind the banding's pin
+    "vec_ann_ivf",             # nearest-centroid numpy kernel
+    "vec_ann_recall_eval",     # nearest-centroid numpy kernel
+    "vec_pq_adc_topk",         # nearest-centroid numpy kernel
+    "vec_ann_ivfpq",           # nearest-centroid numpy kernel
+    "vec_ann_ivfpq_index_maintenance",  # nearest-centroid numpy kernel
+    "vec_ann_ivfpq_recall_eval",  # nearest-centroid numpy kernel
+    "vec_ann_ivfpq_persisted",  # nearest-centroid numpy kernel
+    "vec_ann_ivfpq_compacted",  # nearest-centroid numpy kernel
 }
 
 #: documented-Python keys whose boundary is narrow enough to lint rather
-#: than skip: key → the markers it may show, and only in a pinned stage.
-#: The final plan must stay JVM-side and no other Python node may appear.
-_PYTHON_EVAL_PINNED = {
-    "dedup_simhash": {"MapInArrow"},
+#: than skip: key → (the markers its final plan shows, the markers its
+#: pinned stages show). Each declared marker must be seen where it is
+#: declared, and no other Python node may appear in either.
+_KERNEL = {"ArrowEvalPython"}  # the nearest-centroid numpy kernel
+_PYTHON_EVAL_DECLARED = {
+    "dedup_simhash": (set(), {"MapInArrow"}),
+    "vec_ann_ivf": (_KERNEL, set()),
+    "vec_ann_recall_eval": (_KERNEL, set()),
+    "vec_pq_adc_topk": (_KERNEL, set()),
+    # the IVF-PQ keys also assign behind the residuals' localCheckpoint,
+    "vec_ann_ivfpq": (_KERNEL, _KERNEL),
+    "vec_ann_ivfpq_index_maintenance": (_KERNEL, _KERNEL),
+    "vec_ann_ivfpq_recall_eval": (_KERNEL, _KERNEL),
+    # and only there when the codes are read back from parquet
+    "vec_ann_ivfpq_persisted": (set(), _KERNEL),
+    "vec_ann_ivfpq_compacted": (set(), _KERNEL),
 }
 
 _PY_MARKERS = (
@@ -775,20 +795,20 @@ def test_plan_lint_no_accidental_python_eval(spark, key):
     contain a Python evaluation node — a stray .udf() in a helper would
     silently serialize every row across the Python boundary (the 10-100×
     cliff SURVEY §2.11 exists to fence off)."""
-    if key in _PYTHON_EVAL_OK and key not in _PYTHON_EVAL_PINNED:
+    if key in _PYTHON_EVAL_OK and key not in _PYTHON_EVAL_DECLARED:
         pytest.skip("Python boundary is this operator's documented design")
+    final_ok, pinned_ok = _PYTHON_EVAL_DECLARED.get(key, (set(), set()))
     plan = plan_of(spark, key, mode="simple")
-    found = [m for m in _PY_MARKERS if m in plan]
-    assert not found, f"{key}: unexpected Python eval {found}"
     # stages behind an eager pin never reach the final plan: scan them too
-    allowed = _PYTHON_EVAL_PINNED.get(key, set())
     pinned = "\n".join(_PINNED_PLANS[key])
-    found = [m for m in _PY_MARKERS if m in pinned and m not in allowed]
-    assert not found, f"{key}: unexpected Python eval behind a pin {found}"
-    if allowed:
-        assert any(m in pinned for m in allowed), (
-            f"{key}: declared pinned Python stage {sorted(allowed)} not seen"
-        )
+    for where, text, ok in (
+        ("final plan", plan, final_ok),
+        ("pinned stages", pinned, pinned_ok),
+    ):
+        found = [m for m in _PY_MARKERS if m in text and m not in ok]
+        assert not found, f"{key}: unexpected Python eval in {where} {found}"
+        missing = sorted(m for m in ok if m not in text)
+        assert not missing, f"{key}: declared {missing} not seen in {where}"
 
 
 # --- registry-wide plan-CONSTRUCTION cost lint (r10; SCALE.md r9 lesson) ----
@@ -831,7 +851,7 @@ def test_plan_lint_no_accidental_python_eval(spark, key):
 _BUILD_BASELINE: dict[str, int] = {}
 _BUILD_BASELINE_PATH = os.path.join(
     os.path.dirname(os.path.dirname(os.path.abspath(__file__))),
-    "build_cost_r21.jsonl",
+    "build_cost_r22.jsonl",
 )
 if os.path.exists(_BUILD_BASELINE_PATH):
     with open(_BUILD_BASELINE_PATH) as _fh:
